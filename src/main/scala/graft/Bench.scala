@@ -38,8 +38,6 @@ object Bench {
       .appName(s"graft-bench-$cores")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cores.toString))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     val s = (if (localDir != null) b.config("spark.local.dir", localDir) else b)
@@ -289,7 +287,8 @@ object Bench {
     // leg — 32 GiB at 16 threads was 3x slower purely from G1 overhead.)
     val cmd = Seq(java) ++ addOpens ++ Seq(
       s"-Xmx$heap", "-XX:MaxGCPauseMillis=2000",
-      "-Dspark.ui.enabled=false", "-cp", cp, "graft.Bench")
+      "-Dspark.ui.enabled=false", "-Dspark.sql.adaptive.enabled=false",
+      "-cp", cp, "graft.Bench")
     val pb = new ProcessBuilder(cmd: _*)
     pb.environment().put("SPARK_GRAFT_BENCH_ONLY_CRAWL", "1")
     pb.environment().put("SPARK_GRAFT_BENCH_CORES", cores.toString)
@@ -298,7 +297,6 @@ object Bench {
     pb.environment().put("SPARK_GRAFT_BENCH_BUDGET", budget.toString)
     pb.environment().put("SPARK_GRAFT_BENCH_MAXCYCLES", maxCycles.toString)
     pb.environment().put("SPARK_GRAFT_BENCH_WAVES", waves.toString)
-    pb.environment().put("SPARK_GRAFT_AQE", "false")
     // 2x cores at every width (standard practice for spark.sql.shuffle.
     // partitions): with exactly one task per core, any task-length skew
     // stalls the whole cycle barrier, and the stall is the MAX over

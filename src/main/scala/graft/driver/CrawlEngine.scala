@@ -9,7 +9,7 @@ import graft.model._
 import graft.functions.SeenSketch
 import graft.functions.CrawlFunctions._
 import graft.plans.{SnapTable, Snapshot, SnapshotStore}
-import graft.operators.{Politeness, Stages}
+import graft.operators.Stages
 
 /**
  * The crawl micro-cycle engine (SURVEY §3.4): the reference's continuous
@@ -72,9 +72,6 @@ final class CrawlEngine(
   // anti-join, false negatives are impossible because every enqueue path
   // (runCycle commit AND mid-crawl addSeeds) feeds RECENT before the next
   // drain — so dedup stays exact.
-  // Sketch kind per config.seenSketch: "bloom" (default) or "cuckoo"
-  // (deletable — see functions/SeenSketch.scala); the two-level design is
-  // sketch-agnostic and exactness-preserving for both.
   // Hot-host salting state (north_rule "salted host-hash"; see
   // CrawlConfig.hotHostSalts). `hotHosts` is the PERSISTED promotion set —
   // bucket placement is a pure function of (host, url, hotHosts), loaded
@@ -100,17 +97,15 @@ final class CrawlEngine(
   /** Rebuild MAIN from the live frontier when it is absent or outgrown, or
     * when RECENT has outgrown its sizing (then RECENT also doubles). */
   private def ensureBloom(frontier: DataFrame): Unit = {
-    if (!config.useBloom) return
     val mainStale = mainBloom.isEmpty || seenCountEstimate > mainItems / 2
     val recentFull = recentCount > recentItems / 2
     if (!mainStale && !recentFull) return
     if (recentFull) recentItems *= 2
     mainItems = math.max(math.max(seenCountEstimate * 4, mainItems), 1L << 20)
-    val fresh = phaseTimed("bloom-build")(
-      SeenSketch.build(frontier, "url", config.seenSketch, mainItems, 0.01))
+    val fresh = SeenSketch.build(frontier, "url", mainItems, 0.01)
     mainBloom.foreach(_.unpersist(false))
     mainBloom = Some(spark.sparkContext.broadcast(fresh))
-    recentMaster = Some(SeenSketch.create(config.seenSketch, recentItems, 0.01))
+    recentMaster = Some(SeenSketch.create("bloom", recentItems, 0.01))
     recentCount = 0L
     rebroadcastRecent()
   }
@@ -360,52 +355,9 @@ final class CrawlEngine(
       .getOrElse(spark.emptyDataset[RobotsRow].toDF())
       .withColumn("bucket", hostBucket($"host", config.numBuckets))
 
-  /** O9 — completion: no New and no stale-InProgress rows remain. */
-  def remaining(frontier: DataFrame, cycle: Long): Long =
-    frontier.filter(drainablePredicate(cycle)).count()
-
   private def drainablePredicate(cycle: Long) =
     $"status" === Status.New ||
       ($"status" === Status.InProgress && $"started" < lit(cycle - config.staleCycles))
-
-  /**
-   * Run one micro-cycle; returns (snapshot, drainedCount). drained == 0 with
-   * robots-deferral impossible ⇒ Finished.
-   */
-  // Spark jobs launched so far (timing mode only): each job is a scheduler
-  // round-trip, the unit the per-cycle fixed-latency budget is spent in
-  private lazy val jobsSoFar: () => Long =
-    if (!sys.env.get("GRAFT_CYCLE_TIMING").contains("1")) () => 0L
-    else {
-      val c = new java.util.concurrent.atomic.AtomicLong
-      val logJobs = sys.env.get("GRAFT_JOB_LOG").contains("1")
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            c.incrementAndGet()
-            if (logJobs) {
-              val props = Option(j.properties)
-              def p(k: String) = props.map(_.getProperty(k)).flatMap(Option(_))
-              val site = p("spark.job.description").orElse(p("callSite.short"))
-                .getOrElse(j.stageInfos.lastOption.map(_.name).getOrElse("?"))
-              System.err.println(s"    [job ${j.jobId}] ${site.take(140)}")
-            }
-            ()
-          }
-        })
-      () => c.get()
-    }
-
-  private def phaseTimed[T](label: String)(f: => T): T = {
-    if (!sys.env.get("GRAFT_CYCLE_TIMING").contains("1")) f
-    else {
-      val t0 = System.nanoTime()
-      val j0 = jobsSoFar()
-      val r = f
-      System.err.println(f"  [phase $label] ${(System.nanoTime() - t0) / 1e9}%.2fs jobs=${jobsSoFar() - j0}")
-      r
-    }
-  }
 
   /**
    * The default fetcher — the corpus join. Join strategy by estimated batch
@@ -471,18 +423,14 @@ final class CrawlEngine(
    */
   private def runWave(pruneSnap: Option[Snapshot], frontier: DataFrame,
       robots: DataFrame, cycle: Long): WaveOut = {
-    val tPlan0 = System.nanoTime()
-
     // ---- 1. DRAIN candidates (O1): window top-k per host ----------------
     val drainable = frontier.filter(drainablePredicate(cycle))
     // ---- 2. POLITE (O12): ≤ hostBudget rows per host per cycle ----------
     val hostW = Window.partitionBy($"host").orderBy($"depth", $"prio", $"url")
     val polite0 =
       if (config.hostBudget >= Int.MaxValue / 2) drainable // unbounded budget: top-k is identity, skip the shuffle
-      else if (config.usePolitenessMapGroups)
-        Politeness.tokenBucket(spark, drainable, config.hostBudget)
       else drainable.withColumn("rn", row_number().over(hostW))
-          .filter($"rn" <= config.hostBudget).drop("rn")
+        .filter($"rn" <= config.hostBudget).drop("rn")
     val polite = (if (config.globalBatchCap == Int.MaxValue) polite0
       else {
         // bounded cycles via PER-BUCKET quotas: a global Window.orderBy
@@ -718,49 +666,42 @@ final class CrawlEngine(
     // both sides) and the parse/fetch work runs 2-3x. The same action also
     // returns the bloom-maybe candidates' host buckets, so the seen-side
     // partition pruning costs no extra job.
-    if (sys.env.get("GRAFT_CYCLE_TIMING").contains("1"))
-      System.err.println(f"  [phase plan-build] ${(System.nanoTime() - tPlan0) / 1e9}%.2fs")
     ensureBloom(frontier)
-    val (linksCount, preFiltered) =
-      if (config.useBloom && seenCountEstimate > 0) {
-        val mightContain = bloomContainsUdf(mainBloom.get, recentBloom.get)
-        // the prune must compute the SAME placement as the COW write —
-        // salted placement is still a pure per-url function, so each
-        // candidate url still maps to exactly one bucket dir
-        val bucketOfUrl =
-          bucketCol(call_function("graft_host", $"url"), $"url")
-        val aggRow = phaseTimed("links")(batchLinks.agg(
-          count(lit(1)),
-          collect_set(when(mightContain($"url"), bucketOfUrl))).head())
-        val n = aggRow.getLong(0)
-        val candBuckets = aggRow.getSeq[Int](1).toSet
-        // bloom=no ⇒ definitely unseen (skip the exact join); bloom=maybe ⇒
-        // confirm with exact left_anti against the seen ledger
-        val definitelyNew = batchLinks.filter(!mightContain($"url"))
-        val maybe = batchLinks.filter(mightContain($"url"))
-        // partition pruning on the seen side: a url's frontier row can only
-        // live in bucket(host(url)), so the exact confirm join reads ONLY
-        // the candidate urls' bucket directories of the frontier snapshot —
-        // O(candidate buckets) IO per cycle, not O(frontier). Waves past
-        // the first in a commit group have no snapshot of their chained
-        // frontier to prune (it exists only in memory), so they prune with
-        // the equivalent bucket predicate over the cached frontier.
-        val seenSide =
-          if (candBuckets.isEmpty) frontier.select("url").where(lit(false))
-          else if (candBuckets.size * 2 <= config.numBuckets)
-            pruneSnap match {
-              case Some(p) => snap.readTableBuckets(p, "frontier", candBuckets)
-                .map(_.select("url"))
-                .getOrElse(frontier.select("url").where(lit(false)))
-              case None => frontier
-                .filter($"bucket".isin(candBuckets.toSeq: _*)).select("url")
-            }
-          else frontier.select("url") // most buckets touched: cached full scan wins
-        val confirmed = maybe.join(seenSide, Seq("url"), "left_anti")
-        (n, definitelyNew.unionByName(confirmed))
-      } else (phaseTimed("links")(batchLinks.count()),
-        batchLinks.join(frontier.select("url"), Seq("url"), "left_anti"))
-    val newRows = preFiltered
+    val recent = recentMaster.get
+    val mightContain = bloomContainsUdf(mainBloom.get, recentBloom.get)
+    // the prune must compute the SAME placement as the COW write — salted
+    // placement is still a pure per-url function, so each candidate url
+    // still maps to exactly one bucket dir
+    val bucketOfUrl = bucketCol(call_function("graft_host", $"url"), $"url")
+    val aggRow = batchLinks.agg(
+      count(lit(1)),
+      collect_set(when(mightContain($"url"), bucketOfUrl))).head()
+    val linksCount = aggRow.getLong(0)
+    val candBuckets = aggRow.getSeq[Int](1).toSet
+    // bloom=no ⇒ definitely unseen (skip the exact join); bloom=maybe ⇒
+    // confirm with exact left_anti against the seen ledger
+    val definitelyNew = batchLinks.filter(!mightContain($"url"))
+    val maybe = batchLinks.filter(mightContain($"url"))
+    // partition pruning on the seen side: a url's frontier row can only live
+    // in bucket(host(url)), so the exact confirm join reads ONLY the
+    // candidate urls' bucket directories of the frontier snapshot —
+    // O(candidate buckets) IO per cycle, not O(frontier). Waves past the
+    // first in a commit group have no snapshot of their chained frontier to
+    // prune (it exists only in memory), so they prune with the equivalent
+    // bucket predicate over the cached frontier.
+    val seenSide =
+      if (candBuckets.isEmpty) frontier.select("url").where(lit(false))
+      else if (candBuckets.size * 2 <= config.numBuckets)
+        pruneSnap match {
+          case Some(p) => snap.readTableBuckets(p, "frontier", candBuckets)
+            .map(_.select("url"))
+            .getOrElse(frontier.select("url").where(lit(false)))
+          case None => frontier
+            .filter($"bucket".isin(candBuckets.toSeq: _*)).select("url")
+        }
+      else frontier.select("url") // most buckets touched: cached full scan wins
+    val confirmed = maybe.join(seenSide, Seq("url"), "left_anti")
+    val newRows = definitelyNew.unionByName(confirmed)
       .withColumn("host", call_function("graft_host", $"url"))
       .withColumn("bucket", bucketCol($"host", $"url"))
       .withColumn("prio", lit(cycle))
@@ -793,8 +734,7 @@ final class CrawlEngine(
     // by linksCount — ≤ ~5 MB) so the RECENT-sketch maintenance becomes
     // driver-side puts instead of a separate distributed sketch-build job;
     // big waves keep the distributed build (urls must not flood the driver)
-    val collectUrls = config.useBloom && recentMaster.nonEmpty &&
-      linksCount <= 50000
+    val collectUrls = linksCount <= 50000
     val newAgg =
       if (collectUrls) newRows.groupBy($"bucket")
         .agg(count(lit(1)).as("v1"), collect_list($"url").as("urls"))
@@ -815,7 +755,7 @@ final class CrawlEngine(
       .unionByName(tagged("robnew",
         robotsNew.groupBy($"bucket").agg(count(lit(1)).as("v1"))))
       .unionByName(tagged("drainable", drainable.agg(count(lit(1)).as("v1"))))
-    val statsRows = phaseTimed("stats")(stats.collect())
+    val statsRows = stats.collect()
 
     def one(tag: String): Long = statsRows.collectFirst {
       case r if r.getString(0) == tag => r.getLong(2) }.getOrElse(0L)
@@ -840,16 +780,14 @@ final class CrawlEngine(
     // the full frontier — per-cycle cost is O(enqueued) puts plus a
     // recent-sized allocation; the multi-GB main sketch is untouched until
     // its amortized doubling rebuild.
-    if (config.useBloom && enqueuedCount > 0 && recentMaster.nonEmpty)
-      phaseTimed("bloom-merge") {
-        if (collectUrls)
-          statsRows.withFilter(_.getString(0) == "new")
-            .foreach(_.getSeq[String](6).foreach(recentMaster.get.put))
-        else recentMaster.get.mergeIn(
-          SeenSketch.build(newRows, "url", config.seenSketch, recentItems, 0.01))
-        recentCount += enqueuedCount
-        rebroadcastRecent()
-      }
+    if (enqueuedCount > 0) {
+      if (collectUrls)
+        statsRows.withFilter(_.getString(0) == "new")
+          .foreach(_.getSeq[String](6).foreach(recent.put))
+      else recent.mergeIn(SeenSketch.build(newRows, "url", recentItems, 0.01))
+      recentCount += enqueuedCount
+      rebroadcastRecent()
+    }
 
     // ---- 9. NEXT FRONTIER: status updates restricted to touched buckets -
     // The status-update join runs over ONLY the buckets drained or enqueued
@@ -936,10 +874,9 @@ final class CrawlEngine(
     }.toSet
     if (suspects.isEmpty) return (frontier, Set.empty, None)
     suspects.foreach(b => lastHotCheck(b) = bucketRowEst(b))
-    val found = phaseTimed("hot-detect")(
-      frontier.filter($"bucket".isin(suspects.toSeq: _*))
-        .groupBy($"host").agg(count(lit(1)).as("c"))
-        .filter($"c" > th).select("host").as[String].collect().toSet)
+    val found = frontier.filter($"bucket".isin(suspects.toSeq: _*))
+      .groupBy($"host").agg(count(lit(1)).as("c"))
+      .filter($"c" > th).select("host").as[String].collect().toSet
     val newlyHot = found -- hotHosts
     if (newlyHot.isEmpty) return (frontier, Set.empty, None)
     hotHosts ++= newlyHot
@@ -950,6 +887,8 @@ final class CrawlEngine(
       rebucket, Some(hotHosts.toSeq.sorted.toDF("host")))
   }
 
+  /** Run one micro-cycle and commit it; returns (snapshot, progress,
+    * pending) — see [[runGroup]]. */
   def runCycle(cycle: Long): (Snapshot, Long, Long) = {
     val (s, progressed, pending, _) = runGroup(cycle, 1)
     (s, progressed, pending)
@@ -1027,24 +966,14 @@ final class CrawlEngine(
     val touchedAll = outs.iterator.flatMap(_.touched).toSet ++ promoted
     // robots is COW-committed by hostBucket exactly like the frontier: a
     // robots-fetching group rewrites only the buckets that gained hosts,
-    // not the whole table (the r2 full-table rewrite was O(hosts) per
-    // frontier-expansion cycle). A pre-upgrade workdir holding robots as an
-    // unbucketed blob (key -1) is rebucketed in one full write: listing
-    // every bucket plus -1 as changed replaces the blob dir (no dir is
-    // written for -1, so the key just drops) with per-bucket dirs.
-    val robotsChangedAll: Set[Int] = {
-      val fresh = outs.iterator.flatMap(_.robotsChanged).toSet
-      if (fresh.isEmpty) Set.empty
-      else if (prev.tables.get("robots").exists(_.contains(-1)))
-        (0 until config.numBuckets).toSet + (-1)
-      else fresh
-    }
+    // not the whole table
+    val robotsChangedAll = outs.iterator.flatMap(_.robotsChanged).toSet
     // waves with drained == 0 have structurally empty output; skipping them
     // avoids a full images-table scan against an empty batch
     val outAppend = outs.flatMap(_.outRows).reduceOption(_ unionByName _)
     val lineage = spark.createDataset(outs.flatMap(_.lineageRows)).toDF()
 
-    val s = phaseTimed("commit")(snap.commit(endCycle,
+    val s = snap.commit(endCycle,
       fullTables = hotTable.map(t => Map("hothosts" -> t)).getOrElse(Map.empty),
       cowTables = Map("frontier" -> ((frontierCommit, "bucket", touchedAll))) ++
         (if (robotsChangedAll.nonEmpty)
@@ -1063,16 +992,13 @@ final class CrawlEngine(
         "deduped" -> outs.map(_.deduped).sum.toDouble,
         "robots_fetched" -> outs.map(_.robotsFetched).sum.toDouble,
         "deferred_robots" -> last.deferredRobots.toDouble,
-        "dangling_images" -> outs.map(_.dangling).sum.toDouble)))
+        "dangling_images" -> outs.map(_.dangling).sum.toDouble))
     hotLoadedVersion = s.version // hotHosts is current for this snapshot
 
-    phaseTimed("unpersist") {
-      releasable.foreach(_.unpersist())
-      outs.foreach(_.caches.foreach(_.unpersist()))
-      frontier.unpersist()
-      robots.unpersist()
-      ()
-    }
+    releasable.foreach(_.unpersist())
+    outs.foreach(_.caches.foreach(_.unpersist()))
+    frontier.unpersist()
+    robots.unpersist()
     (s, last.drained + last.robotsFetched, last.pending, waves)
   }
 
@@ -1082,23 +1008,18 @@ final class CrawlEngine(
     drive(maxCycles)
   }
 
-  /** Drive micro-cycles over an already-seeded frontier until Finished,
-    * committing every `config.wavesPerCommit` cycles (O10 batch loop). */
+  /** Drive at most `maxCycles` micro-cycles, starting after the latest
+    * committed cycle, until Finished — committing every
+    * `config.wavesPerCommit` cycles (O10 batch loop). */
   def drive(maxCycles: Int = 1000): Snapshot = {
-    var cycle = 1L
+    var last = snap.latest.getOrElse(sys.error("engine not initialized"))
+    val end = last.cycle + maxCycles
+    var cycle = last.cycle + 1
     var done = false
-    var last = snap.latest.get
-    val timing = sys.env.get("GRAFT_CYCLE_TIMING").contains("1")
-    while (!done && cycle <= maxCycles) {
-      val t0 = System.nanoTime()
-      val j0 = jobsSoFar()
-      val maxWaves = math.max(1, math.min(config.wavesPerCommit.toLong,
-        maxCycles - cycle + 1).toInt)
+    while (!done && cycle <= end) {
+      val maxWaves =
+        math.max(1, math.min(config.wavesPerCommit.toLong, end - cycle + 1).toInt)
       val (s, progressed, pending, waves) = runGroup(cycle, maxWaves)
-      if (timing) {
-        val jobs = jobsSoFar() - j0
-        System.err.println(f"[cycles $cycle..${cycle + waves - 1}] ${(System.nanoTime() - t0) / 1e9}%.2fs progressed=$progressed pending=$pending jobs=$jobs (${jobs.toDouble / waves}%.1f/cycle)")
-      }
       last = s
       if (progressed == 0 || pending == 0) done = true
       cycle += waves
@@ -1130,20 +1051,7 @@ final class CrawlEngine(
   /** Resume from the latest committed snapshot (exactness: SURVEY §7.2). */
   def resume(maxCycles: Int = 1000): Snapshot = {
     prepareResume()
-    val start = snap.latest.getOrElse(sys.error("nothing to resume")).cycle + 1
-    var cycle = start
-    var done = false
-    var last = snap.latest.get
-    while (!done && cycle <= start + maxCycles) {
-      // group-committing resume: same loop shape as drive()
-      val maxWaves = math.max(1, math.min(config.wavesPerCommit.toLong,
-        start + maxCycles - cycle + 1).toInt)
-      val (s, progressed, pending, waves) = runGroup(cycle, maxWaves)
-      last = s
-      if (progressed == 0 || pending == 0) done = true
-      cycle += waves
-    }
-    last
+    drive(maxCycles)
   }
 
   // ---- result views ------------------------------------------------------
@@ -1166,7 +1074,7 @@ object CrawlEngine {
       outRows: Option[DataFrame], // this wave's output append (None when drained == 0)
       lineageRows: Seq[LineageRow],
       touched: Set[Int],
-      robotsChanged: Set[Int], // robnew buckets (legacy-blob upgrade applied at commit)
+      robotsChanged: Set[Int], // robnew buckets
       drained: Long,
       robotsFetched: Long,
       enqueued: Long,

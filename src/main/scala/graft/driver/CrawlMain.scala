@@ -1,6 +1,6 @@
 package graft.driver
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.CrawlConfig
 import graft.corpus.Corpus
@@ -20,6 +20,18 @@ import graft.corpus.Corpus
  * dedup applies) and resumes the crawl to completion.
  */
 object CrawlMain {
+
+  /** One row per cycle from the per-bucket lineage: (cycle, drained,
+    * enqueued, deduped, deferred_polite, errors). `deduped` and
+    * `deferred_polite` are per-wave totals repeated on every bucket row of
+    * that wave, so they take the max, not the sum. */
+  def cycleSummary(lineage: DataFrame): DataFrame =
+    lineage.groupBy("cycle").agg(
+      sum("drained").as("drained"), sum("enqueued").as("enqueued"),
+      max("deduped").as("deduped"), max("deferred_polite").as("deferred_polite"),
+      sum("errors").as("errors"))
+      .orderBy("cycle")
+
   def main(args: Array[String]): Unit = {
     val a = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
     val hosts = a.getOrElse("--hosts", "10").toInt
@@ -38,10 +50,6 @@ object CrawlMain {
       .master(s"local[$cores]")
       .appName("graft-crawl")
       .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.wholeStage",
-        sys.env.getOrElse("GRAFT_WSCG", "true"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -72,11 +80,7 @@ object CrawlMain {
     val outputs = engine.outputNow.count()
     val okPsnr = engine.outputNow.filter(col("psnr") >= 40.0 && col("caption_ok")).count()
     val fetched = statuses.getOrElse("Completed", 0L) + statuses.getOrElse("WithError", 0L)
-    println(engine.lineageNow.groupBy("cycle").agg(
-      sum("drained").as("drained"), sum("enqueued").as("enqueued"),
-      sum("deduped").as("deduped"), sum("deferred_polite").as("deferred_polite"),
-      sum("errors").as("errors"))
-      .orderBy("cycle").collect()
+    println(cycleSummary(engine.lineageNow).collect()
       .map(r => s"cycle=${r.getLong(0)} drained=${r.getLong(1)} enqueued=${r.getLong(2)} " +
         s"deduped=${r.getLong(3)} deferred_polite=${r.getLong(4)} errors=${r.getLong(5)}")
       .mkString("\n"))

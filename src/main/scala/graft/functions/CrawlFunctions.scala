@@ -60,11 +60,10 @@ object CrawlFunctions {
     if (imageId == null) null else ImageCodec.caption(imageId))
 
   /** URL-seen membership over the engine's two-level sketch (main = full
-    * frontier at last rebuild; recent = everything enqueued since; kind —
-    * bloom or cuckoo — per CrawlConfig.seenSketch). Both sketches ship via
-    * `SparkContext.broadcast` — once per executor, never per task
-    * closure — so at 10^10-URL scale the multi-GB main sketch is sent to
-    * each executor exactly once per rebuild. */
+    * frontier at last rebuild; recent = everything enqueued since). Both
+    * sketches ship via `SparkContext.broadcast` — once per executor, never
+    * per task closure — so at 10^10-URL scale the multi-GB main sketch is
+    * sent to each executor exactly once per rebuild. */
   def bloomContainsUdf(
       main: org.apache.spark.broadcast.Broadcast[SeenSketch],
       recent: org.apache.spark.broadcast.Broadcast[SeenSketch]): org.apache.spark.sql.expressions.UserDefinedFunction =

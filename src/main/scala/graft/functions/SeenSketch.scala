@@ -1,28 +1,22 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.util.sketch.BloomFilter
 
 /**
- * The URL-seen sketch abstraction (north-star: "bloom/cuckoo URL-seen
- * filter"): the engine's two-level MAIN/RECENT design is sketch-agnostic —
- * it needs probabilistic membership with NO false negatives, a driver-side
- * `put`, and an equal-sizing `mergeIn`. Two implementations:
- *
- *  - [[BloomSeen]] (default): Spark's BloomFilter; distributed build via
- *    `df.stat.bloomFilter`; no deletions (rebuild-only retirement).
- *  - [[CuckooSeen]]: the from-scratch [[CuckooFilter]]; supports `remove`
- *    for recrawl/expiry workloads; a saturated filter degrades to
- *    all-maybe (exactness preserved, see CuckooFilter scaladoc).
- *
- * Both serialize for `sc.broadcast` (executors get one copy per rebuild,
- * never per task closure).
+ * The URL-seen sketch (north-star: "bloom URL-seen filter"): the engine's
+ * two-level MAIN/RECENT design needs probabilistic membership with NO false
+ * negatives, a driver-side `put`, and an equal-sizing `mergeIn`. Backed by
+ * Spark's BloomFilter; distributed build via `df.stat.bloomFilter`. The
+ * crawl never expires a seen URL, so no delete is needed: retirement is a
+ * rebuild. Serializes for `sc.broadcast` (executors get one copy per
+ * rebuild, never per task closure).
  */
-sealed trait SeenSketch extends Serializable {
-  def mightContain(s: String): Boolean
-  def put(s: String): Unit
-  /** Fold `other` (same kind, same sizing) into this sketch in place. */
-  def mergeIn(other: SeenSketch): Unit
+final class SeenSketch(val bf: BloomFilter) extends Serializable {
+  def mightContain(s: String): Boolean = bf.mightContainString(s)
+  def put(s: String): Unit = { bf.putString(s); () }
+  /** Fold `other` (same sizing) into this sketch in place. */
+  def mergeIn(other: SeenSketch): Unit = { bf.mergeInPlace(other.bf); () }
   /** Immutable deep copy for broadcasting while the master keeps mutating. */
   def frozenCopy(): SeenSketch = {
     val bos = new java.io.ByteArrayOutputStream()
@@ -34,134 +28,17 @@ sealed trait SeenSketch extends Serializable {
   }
 }
 
-final class BloomSeen(val bf: BloomFilter) extends SeenSketch {
-  override def mightContain(s: String): Boolean = bf.mightContainString(s)
-  override def put(s: String): Unit = { bf.putString(s); () }
-  override def mergeIn(other: SeenSketch): Unit = other match {
-    case b: BloomSeen => bf.mergeInPlace(b.bf); ()
-    case o => throw new IllegalArgumentException(s"bloom cannot merge $o")
-  }
-}
-
-final class CuckooSeen(val cf: CuckooFilter) extends SeenSketch {
-  override def mightContain(s: String): Boolean = cf.mightContain(s)
-  override def put(s: String): Unit = cf.put(s)
-  override def mergeIn(other: SeenSketch): Unit = other match {
-    case c: CuckooSeen => cf.mergeIn(c.cf)
-    case o => throw new IllegalArgumentException(s"cuckoo cannot merge $o")
-  }
-  def remove(s: String): Boolean = cf.remove(s)
-}
-
-/**
- * Hash-sharded composite sketch: routes every key to one of `shards.length`
- * child sketches by an independent splitmix64 hash. Two jobs:
- *  - lifts the single-filter size ceiling ([[CuckooFilter.MaxItems]] — the
- *    Int-indexed slot array) to any total size, per SURVEY §4.3's sharding
- *    design for the 10^10-URL MAIN sketch;
- *  - at cluster scale each executor could load only the shards its
- *    partitions probe (the broadcast here still ships all shards — same
- *    total bytes as one big filter, so nothing is lost at sandbox scale).
- * No false negatives as long as no child has any (routing is
- * deterministic), and merge requires identical shard counts.
- */
-final class ShardedSeen(val shards: Array[SeenSketch]) extends SeenSketch {
-  require(shards.nonEmpty)
-  @inline private def shardOf(s: String): Int = {
-    var h = 1125899906842597L
-    var i = 0
-    while (i < s.length) { h = 31 * h + s.charAt(i); i += 1 }
-    // distinct finalizer stream from CuckooFilter.hashOf: xor with the
-    // golden ratio before mixing so shard routing and in-shard placement
-    // are independent hashes of the same key
-    ((graft.image.ImageCodec.mix64(h ^ 0x9e3779b97f4a7c15L) >>> 33)
-      % shards.length).toInt
-  }
-  override def mightContain(s: String): Boolean =
-    shards(shardOf(s)).mightContain(s)
-  override def put(s: String): Unit = shards(shardOf(s)).put(s)
-  /** Deletion routes to the owning shard, so a sharded CUCKOO sketch keeps
-    * the deletable property the single-filter form advertises (sharding is
-    * a size workaround, not a semantics change). Bloom children cannot
-    * delete — that's a caller error, not a silent no-op. */
-  def remove(s: String): Boolean = shards(shardOf(s)) match {
-    case c: CuckooSeen => c.remove(s)
-    case n: ShardedSeen => n.remove(s)
-    case other => throw new UnsupportedOperationException(
-      s"remove needs cuckoo-backed shards, found ${other.getClass.getSimpleName}")
-  }
-  override def mergeIn(other: SeenSketch): Unit = other match {
-    case o: ShardedSeen =>
-      require(o.shards.length == shards.length,
-        s"sharded merge needs equal shard counts (${o.shards.length} vs ${shards.length})")
-      var i = 0
-      while (i < shards.length) { shards(i).mergeIn(o.shards(i)); i += 1 }
-    case o => throw new IllegalArgumentException(s"sharded cannot merge $o")
-  }
-}
-
 object SeenSketch {
 
-  /** Empty driver-side sketch of the requested kind. A cuckoo sketch sized
-    * past one filter's Int-indexed ceiling comes back hash-sharded
-    * ([[ShardedSeen]]) instead of overflowing the slot-array allocation. */
+  /** Empty driver-side sketch of the requested kind (only `"bloom"`). */
   def create(kind: String, items: Long, fpp: Double): SeenSketch = kind match {
-    case "bloom" => new BloomSeen(BloomFilter.create(items, fpp))
-    case "cuckoo" =>
-      if (items <= CuckooFilter.MaxItems) new CuckooSeen(CuckooFilter.create(items))
-      else {
-        val (n, per) = cuckooShardPlan(items)
-        new ShardedSeen(Array.fill(n)(
-          new CuckooSeen(CuckooFilter.create(per)): SeenSketch))
-      }
+    case "bloom" => new SeenSketch(BloomFilter.create(items, fpp))
     case k => throw new IllegalArgumentException(s"unknown seen-sketch kind: $k")
   }
 
-  /** (shard count, per-shard expectedItems) for a cuckoo sketch of `items`:
-    * 2x per-shard headroom absorbs routing skew (the power-of-two bucket
-    * rounding inside CuckooFilter.create usually grants it anyway), capped
-    * at the single-filter ceiling; the saturation latch keeps even a
-    * skew-overflowed shard exact. */
-  private[graft] def cuckooShardPlan(items: Long): (Int, Long) = {
-    val n = ((items + CuckooFilter.MaxItems - 1) / CuckooFilter.MaxItems).toInt
-    val per = math.min(CuckooFilter.MaxItems, 2L * ((items + n - 1) / n))
-    (n, per)
-  }
-
-  /**
-   * Distributed build over a string column: bloom uses Spark's native
-   * `stat.bloomFilter` aggregate (internal tree merge); cuckoo builds one
-   * full-sized sketch per non-empty partition and merges them pairwise ON
-   * EXECUTORS via `treeReduce` — the driver receives exactly ONE merged
-   * sketch, so peak driver memory is O(one filter), not
-   * O(partitions × filter) as a collect-then-merge would be. (Merging by
-   * fingerprint re-insertion is valid because a (bucket, fp) pair fully
-   * determines both candidate buckets.) Either way the url column streams
-   * once and only sketches move.
-   */
-  def build(df: DataFrame, column: String, kind: String, items: Long,
-      fpp: Double): SeenSketch = kind match {
-    case "bloom" => new BloomSeen(df.stat.bloomFilter(column, items, fpp))
-    case "cuckoo" =>
-      val strings = df.select(column).na.drop()
-        .select(org.apache.spark.sql.functions.col(column).cast("string"))
-      // empty-source guard BEFORE the sketch build: the former approach
-      // (union a driver-built full-size empty filter into the RDD to keep
-      // treeReduce total) shipped a filter that is ~GiB near the MaxItems
-      // ceiling through task serialization purely for this case; a limit-1
-      // probe of the source costs one tiny job and the seed disappears
-      if (strings.isEmpty) create(kind, items, fpp)
-      else strings.as[String](Encoders.STRING)
-        .rdd
-        .mapPartitions { it =>
-          if (it.isEmpty) Iterator.empty
-          else {
-            val f = create("cuckoo", items, fpp)
-            it.foreach(f.put)
-            Iterator.single(f)
-          }
-        }
-        .treeReduce((a, b) => { a.mergeIn(b); a })
-    case k => throw new IllegalArgumentException(s"unknown seen-sketch kind: $k")
-  }
+  /** Distributed build over a string column via Spark's native
+    * `stat.bloomFilter` aggregate (internal tree merge): the column streams
+    * once and only sketches move. */
+  def build(df: DataFrame, column: String, items: Long, fpp: Double): SeenSketch =
+    new SeenSketch(df.stat.bloomFilter(column, items, fpp))
 }

@@ -142,11 +142,8 @@ final case class CrawlConfig(
       * hotHostSalts <= 1 disables salting. */
     hotHostSalts: Int = 8,
     hotHostThreshold: Long = 1000000L,
-    useBloom: Boolean = true,
-    seenSketch: String = "bloom", // URL-seen sketch kind: "bloom" | "cuckoo" (deletable; functions/SeenSketch.scala)
     globalBatchCap: Int = Int.MaxValue, // per-cycle drain cap (reference pulls 25/manager, unbounded pulls/cycle)
     wavesPerCommit: Int = 1, // drain waves chained in memory per snapshot commit: K > 1 amortizes the COW write + frontier re-read over K cycles (semantics unchanged; resume granularity = the group)
-    usePolitenessMapGroups: Boolean = false, // window top-k (default) vs typed flatMapGroups token bucket
     broadcastBatchLimit: Long = 250000L, // claimed batches estimated above this switch fetch/validate joins from broadcast to shuffle-hash
     bucketedCorpusTable: Option[String] = None, // catalog table holding the RESOLVED corpus bucketed by src_url (Spark bucketBy / Iceberg bucket(url)): mega-wave fetch joins become co-located — the corpus side plans with NO Exchange, bodies never shuffle at any batch size
     defaultHeaders: Map[String, String] = Map.empty, // Request headers (Protocol.scala:33); per-seed overrides via initSeeds/addSeeds

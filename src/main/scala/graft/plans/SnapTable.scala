@@ -192,22 +192,12 @@ final class SnapTable(spark: SparkSession, root: String) extends SnapshotStore {
     var tables: TableState = parent.map(_.tables).getOrElse(Map.empty)
     var appended: Map[String, List[String]] = parent.map(_.appended).getOrElse(Map.empty)
 
-    def timed[T](label: String)(f: => T): T = {
-      if (!sys.env.get("GRAFT_CYCLE_TIMING").contains("1")) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(f"    [write $label] ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        r
-      }
-    }
-
     // all data files of the snapshot are independent — launch every table's
     // write as a concurrent Spark job and wait; the manifest (the only
     // atomicity point) is written strictly after all data lands
     val fullJobs = fullTables.toSeq.map { case (name, df) =>
       val dir = s"$root/data/$name/v$version"
-      (Future { timed(s"full:$name")(df.write.mode("overwrite").parquet(dir)) },
+      (Future { df.write.mode("overwrite").parquet(dir) },
         () => { tables += name -> Map(-1 -> dir) })
     }
 
@@ -229,9 +219,9 @@ final class SnapTable(spark: SparkSession, root: String) extends SnapshotStore {
           // coalesce the exchange down to a handful of partitions, which
           // serializes the parquet write; pinning to the changed-bucket
           // count keeps one write task per bucket (still one file/bucket)
-          timed(s"cow:$name")(df.filter(df(bucketCol).isin(changed.toSeq: _*))
+          df.filter(df(bucketCol).isin(changed.toSeq: _*))
             .repartition(changed.size, df(bucketCol))
-            .write.mode("overwrite").partitionBy(bucketCol).parquet(cycleDir))
+            .write.mode("overwrite").partitionBy(bucketCol).parquet(cycleDir)
         }, () => {
           val prev = tables.getOrElse(name, Map.empty)
           val written: Map[Int, String] = changed.iterator.map { b =>
@@ -244,7 +234,7 @@ final class SnapTable(spark: SparkSession, root: String) extends SnapshotStore {
 
     val appendJobs = appends.toSeq.map { case (name, df) =>
       val dir = s"$root/data/$name/v$version"
-      (Future { timed(s"append:$name")(df.write.mode("overwrite").parquet(dir)) },
+      (Future { df.write.mode("overwrite").parquet(dir) },
         () => { appended += name -> (appended.getOrElse(name, Nil) :+ dir) })
     }
 

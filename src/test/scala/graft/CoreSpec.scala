@@ -236,3 +236,34 @@ class ImageCodecSpec extends AnyFunSuite {
     assert(ImageCodec.psnr(a, b) < 40.0)
   }
 }
+
+class SeenSketchSpec extends AnyFunSuite {
+  test("broadcast-freeze roundtrip preserves answers") {
+    val s = graft.functions.SeenSketch.create("bloom", 1000, 0.01)
+    val in = (0 until 400).map(i => s"http://z$i.test/p$i")
+    in.foreach(s.put)
+    val frozen = s.frozenCopy()
+    assert(in.forall(frozen.mightContain), "no false negatives after freeze")
+    s.put("http://after-freeze.test/")
+    assert(s.mightContain("http://after-freeze.test/"))
+    assert(!frozen.mightContain("http://after-freeze.test/"),
+      "frozen copy must not see later inserts")
+  }
+}
+
+class MainSourceSpec extends AnyFunSuite {
+  test("no RDD API under src/main/scala (BASELINE.json: DataFrame/Dataset only)") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val rdd = """[.]rdd\b|RDD\[""".r
+    val hits = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if rdd.findFirstIn(line).nonEmpty => s"$f:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+}

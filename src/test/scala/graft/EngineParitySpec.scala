@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 import graft.model._
 import graft.corpus.Fixtures
-import graft.driver.CrawlEngine
+import graft.driver.{CrawlEngine, CrawlMain}
 import graft.oracle.RefOracle
 
 object TestSpark {
@@ -49,6 +49,20 @@ class EngineParitySpec extends AnyFunSuite {
       spark.createDataset(pages).toDF(), spark.createDataset(images).toDF(), dir)
     engine.run(seeds)
     (engine, RefOracle.crawl(pages, seeds, cfg))
+  }
+
+  /** CrawlMain's per-cycle summary must report each cycle's `deduped` as
+    * that cycle's snapshot metric (at wavesPerCommit = 1 every snapshot
+    * commits exactly one cycle). Returns the summary's (cycle, deduped). */
+  def assertCycleSummary(engine: CrawlEngine): Seq[(Long, Long)] = {
+    assert(engine.config.wavesPerCommit === 1)
+    val snapDeduped = (1L to engine.snap.latestVersion.get).map(engine.snap.readSnapshot)
+      .map(s => s.cycle -> s.metrics("deduped").toLong).toMap
+    val rows = CrawlMain.cycleSummary(engine.lineageNow)
+      .select("cycle", "deduped").as[(Long, Long)].collect().toSeq
+    assert(rows.nonEmpty, "lineage holds cycles")
+    rows.foreach { case (c, d) => assert(d === snapDeduped(c), s"cycle $c deduped") }
+    rows
   }
 
   def assertParity(engine: CrawlEngine, oracle: RefOracle.Outcome,
@@ -160,13 +174,6 @@ class EngineParitySpec extends AnyFunSuite {
     assert(o.visited.size === 4)
   }
 
-  test("dedup with cuckoo seen-sketch: identical crawl outcome") {
-    val cfg = CrawlConfig(seenSketch = "cuckoo")
-    val (e, o) = runBoth(Fixtures.dedupDiamond, Fixtures.dedupDiamondSeeds, cfg)
-    assertParity(e, o)
-    assert(o.visited.size === 4)
-  }
-
   test("redirects — chains ≤5 followed, >5 error") {
     val (e, o) = runBoth(Fixtures.redirects, Fixtures.redirectsSeeds)
     assertParity(e, o)
@@ -188,6 +195,7 @@ class EngineParitySpec extends AnyFunSuite {
     // lineage records deferred_polite > 0 at least once (60 pages / 5 budget)
     val lin = e.lineageNow.groupBy().sum("deferred_polite").as[Long].head()
     assert(lin > 0, "politeness deferral recorded in lineage")
+    assertCycleSummary(e)
   }
 
   test("hot-host salting: promotion spreads the host across k buckets, crawl identical, resume exact") {
@@ -212,6 +220,8 @@ class EngineParitySpec extends AnyFunSuite {
       hotHostSalts = 4, hotHostThreshold = 12)
     val (se, oracle) = runBoth(pages, seeds, salted)
     assertParity(se, oracle)
+    // the /p1 back-links dedup in cycles whose lineage spans several buckets
+    assert(assertCycleSummary(se).exists(_._2 > 0), "some cycle deduped a link")
     // promotion happened and persisted in the snapshot's hot-host table
     assert(se.snap.readTable(se.snap.latest.get, "hothosts")
       .map(_.select("host").as[String].collect().toSet) === Some(Set("hot.test")),
@@ -249,12 +259,6 @@ class EngineParitySpec extends AnyFunSuite {
       spark.createDataset(Fixtures.imagesFor(pages)).toDF(), se.workDir)
     val err = intercept[IllegalArgumentException](bad.resume())
     assert(err.getMessage.contains("hotHostSalts"))
-  }
-
-  test("politeness flatMapGroups variant produces identical crawl") {
-    val cfg = CrawlConfig(maxDepth = 10, hostBudget = 5, usePolitenessMapGroups = true)
-    val (e, o) = runBoth(Fixtures.hotHost, Fixtures.hotHostSeeds, cfg)
-    assertParity(e, o)
   }
 
   test("mega-batch shuffle-join variant produces identical crawl") {
@@ -300,6 +304,10 @@ class EngineParitySpec extends AnyFunSuite {
     val e1 = mkEngine()
     e1.init(Fixtures.hotHostSeeds)
     (1L to 3L).foreach(e1.runCycle)
+    // a capped resume commits exactly maxCycles more snapshots
+    val before = e1.snap.latestVersion.get
+    mkEngine().resume(maxCycles = 1)
+    assert(e1.snap.latestVersion.get === before + 1, "resume(maxCycles = 1) commits one cycle")
     // resume in a fresh engine over the same state dir
     val e2 = mkEngine()
     e2.resume()
