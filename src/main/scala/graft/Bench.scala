@@ -16,12 +16,13 @@ import graft.model.CrawlConfig
  *  2. crawl throughput: a mega-frontier micro-cycle (every corpus URL
  *     seeded at depth 0, one full drain → robots → fetch → parse →
  *     validate → dedup cycle) over the same deterministic corpus at
- *     local[8] and local[32] — the sandbox stand-in for the north_rule's
- *     N vs 4N executors; reports fetched URLs/sec and frontier-enqueue
- *     rows/sec at both levels plus scaling efficiency
- *     tput(32)/(4·tput(8)). Corpus synthesis + redirect resolution are
- *     excluded from the timed region (they are one-time setup, not crawl
- *     throughput); seeding/enqueue and all micro-cycle work are included.
+ *     local[N] and local[4N], N = SPARK_GRAFT_BENCH_N (default 4) — the
+ *     sandbox stand-in for the north_rule's N vs 4N executors; reports
+ *     fetched URLs/sec and frontier-enqueue rows/sec at both levels plus
+ *     scaling efficiency tput(4N)/(4·tput(N)). Corpus synthesis + redirect
+ *     resolution are excluded from the timed region (they are one-time
+ *     setup, not crawl throughput); seeding/enqueue and all micro-cycle
+ *     work are included.
  */
 object Bench {
 

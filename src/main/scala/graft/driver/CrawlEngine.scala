@@ -411,9 +411,17 @@ final class CrawlEngine(
    * One drain → robots → fetch → parse → enqueue wave (SURVEY §3.4 steps
    * 1-8) as pure transforms over the IN-MEMORY frontier/robots state,
    * without committing: runGroup chains `wavesPerCommit` of these through
-   * their cached outputs and commits once, so the snapshot write (the
+   * their checkpointed outputs and commits once, so the snapshot write (the
    * dominant fixed cost at small wave sizes) amortizes over K waves while
    * crawl semantics stay wave-per-cycle identical.
+   *
+   * Design rule: wave intermediates are plan leaves (`localCheckpoint`); no
+   * cycle-path DataFrame is persisted on top of another persisted one. A
+   * persisted plan is printed in full inside every plan that reads it, at
+   * every SQL execution start and AQE stage update, so stacked caches doubled
+   * the printed tree per layer. Checkpoint blocks are not recomputed after
+   * executor loss: a failed group replays from the last committed snapshot,
+   * exactly as runGroup's checkpointed wave chaining already does.
    *
    * @param pruneSnap the committed snapshot whose manifest may prune the
    *   dedup-confirm read — only valid for the FIRST wave after a commit;
@@ -443,7 +451,7 @@ final class CrawlEngine(
         polite0.withColumn("grn", row_number().over(
             Window.partitionBy($"bucket").orderBy($"depth", $"prio", $"url")))
           .filter($"grn" <= quota).drop("grn")
-      }).persist(StorageLevel.MEMORY_AND_DISK)
+      }).localCheckpoint(false)
 
     // ---- 3. ROBOTS gate (P3): known-allow / known-deny / defer+fetch ----
     // The gate NEVER broadcasts the full robots table (at 10^7-10^8
@@ -470,7 +478,7 @@ final class CrawlEngine(
       .withColumn("robots_ok", $"fetched_cycle".isNotNull &&
         ($"all_allowed" ||
           robotsAllowedUdf($"rules", lit(config.userAgent), $"url")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     val robotsUnknown = withRobots.filter($"fetched_cycle".isNull)
 
     val denied = withRobots.filter($"fetched_cycle".isNotNull && !$"robots_ok")
@@ -518,7 +526,7 @@ final class CrawlEngine(
       ($"parsed".isNull).as("all_allowed"),
       $"parsed".as("rules"), lit(cycle).as("fetched_cycle"), $"req_headers")
       .withColumn("bucket", hostBucket($"host", config.numBuckets))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     val robotsOut = robots.unionByName(robotsNew)
 
     // ---- 4. FETCH (S3/S4): stream the corpus ONCE against broadcast batch
@@ -536,7 +544,7 @@ final class CrawlEngine(
     // broadcast bytes, but the batch is politeness/cap-bounded and default
     // headers are a handful of entries.
     val claimed = allowed.select($"url", $"host", $"bucket", $"depth",
-      $"prio", $"retries", $"headers").persist(StorageLevel.MEMORY_AND_DISK)
+      $"prio", $"retries", $"headers").localCheckpoint(false)
     val fetched = config.fetcher match {
       case Some(fetch) =>
         // injected fetcher (S3 production seam, CrawlConfig.fetcher): the
@@ -568,8 +576,8 @@ final class CrawlEngine(
       Stages.ajaxRewrite))
     // CACHE SLIMMING (bandwidth at scale): when both downstream hooks are
     // the defaults, the body's LAST consumer is the link extraction — so
-    // extract links BEFORE persisting and drop f_body/f_ct from the cached
-    // wave state. Otherwise the two fattest wave caches (`responded`, `ok`)
+    // extract links BEFORE checkpointing and drop f_body/f_ct from the
+    // wave leaf. Otherwise the two fattest wave leaves (`responded`, `ok`)
     // each hold every fetched body for the whole wave: cache fill + the 2-3
     // downstream reads stream those bytes through memory again, and on the
     // single-box bench that traffic contends with the shuffle/COW writes
@@ -584,7 +592,7 @@ final class CrawlEngine(
             when($"outcome" === "OK", extractLinksUdf($"f_body", $"url", $"f_ct")))
           .drop("f_body", "f_ct")
       else respondedWide)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
 
     // ---- 6. PARSE (X1/X2) + 7. result-leg stage chain (P8 by default) ---
     // ajax rewrite already mutated f_body in the response chain; the
@@ -598,7 +606,7 @@ final class CrawlEngine(
     val resultChain = config.resultStages
       .getOrElse(Seq(Stages.maxDepth(config.maxDepth)))
     val ok = resultChain.foldLeft(parsed)((df, s) => s(df))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
 
     // outcomes ledger for the claimed batch (O6/O7) + robots denials
     // (RobotsFilter.scala:58-61 — deny ⇒ Error(task, RobotsPathFiltered(ua)))
@@ -607,7 +615,7 @@ final class CrawlEngine(
       .unionByName(denied.select($"url", $"host", $"bucket", $"depth",
         $"prio", $"retries", lit("ERROR").as("outcome"),
         lit(Reasons.robotsPathFiltered(config.userAgent)).as("reason")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
 
     // ---- output rows (S7): image payload + per-row validation -----------
     // join direction matters at scale: broadcast the (small) batch keys to
@@ -655,17 +663,13 @@ final class CrawlEngine(
     // min(depth) then BFS order (SURVEY §3.5)
     val batchLinks = rawLinks.groupBy($"url")
       .agg(min($"depth").as("depth"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
 
-    // ---- materialize the heavy shared chain in ONE linear job -----------
-    // polite → robots-gate → fetch-join → respond → parse → explode →
-    // batchLinks is a straight line through every persisted intermediate;
-    // forcing it with a single aggregate fills all the caches SEQUENTIALLY.
-    // Without this, the parallel branches of the stats union race to
-    // compute the same uncached ancestors concurrently (cache misses on
-    // both sides) and the parse/fetch work runs 2-3x. The same action also
-    // returns the bloom-maybe candidates' host buckets, so the seen-side
-    // partition pruning costs no extra job.
+    // ---- first action over the wave leaves -----------------------------
+    // each localCheckpoint above ran only its plan's shuffle stages; this
+    // aggregate computes the remaining leaf partitions along the chain in
+    // one job, and returns the bloom-maybe candidates' host buckets, so the
+    // seen-side partition pruning costs no extra job.
     ensureBloom(frontier)
     val recent = recentMaster.get
     val mightContain = bloomContainsUdf(mainBloom.get, recentBloom.get)
@@ -713,7 +717,7 @@ final class CrawlEngine(
       // Manager issues Request(task, Map()) for every pulled task
       // (Manager.scala:100-110) — headers are per-request, not inherited
       .withColumn("headers", typedlit(config.defaultHeaders))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
 
     // ---- per-bucket lineage / metrics in ONE action ---------------------
     // The reference's counters (Master.scala:46-47) are driver-side ints;
@@ -846,9 +850,7 @@ final class CrawlEngine(
       deferredRobots = deferredRobots,
       deferredPolite = deferredPolite,
       dangling = one("dangling"),
-      pending = pending,
-      caches = Seq(polite, withRobots, claimed, responded, ok, outcomes,
-        newRows, robotsNew, batchLinks))
+      pending = pending)
   }
 
   /**
@@ -996,7 +998,6 @@ final class CrawlEngine(
     hotLoadedVersion = s.version // hotHosts is current for this snapshot
 
     releasable.foreach(_.unpersist())
-    outs.foreach(_.caches.foreach(_.unpersist()))
     frontier.unpersist()
     robots.unpersist()
     (s, last.drained + last.robotsFetched, last.pending, waves)
@@ -1082,6 +1083,5 @@ object CrawlEngine {
       deferredRobots: Long,
       deferredPolite: Long,
       dangling: Long,
-      pending: Long,
-      caches: Seq[DataFrame]) // persisted intermediates released after the group commit
+      pending: Long)
 }

@@ -238,13 +238,17 @@ final class SnapTable(spark: SparkSession, root: String) extends SnapshotStore {
         () => { appended += name -> (appended.getOrElse(name, Nil) :+ dir) })
     }
 
-    try (fullJobs ++ cowJobs ++ appendJobs).foreach { case (job, apply) =>
+    val jobs = fullJobs ++ cowJobs ++ appendJobs
+    try jobs.foreach { case (job, apply) =>
       // bounded wait: a hung write must fail the commit, not block forever
       Await.result(job, Duration(2, "hours")); apply()
     } catch { case e: Throwable =>
       // a failed commit must not leak orphan v$version data dirs — nothing
       // references them (the manifest is written last), so delete before
-      // rethrowing: half-written cycles stay invisible AND reclaimable
+      // rethrowing: half-written cycles stay invisible AND reclaimable.
+      // Sibling writes may still be running; let every one finish first, or
+      // a late one recreates its dir after the cleanup
+      jobs.foreach { case (job, _) => scala.util.Try(Await.ready(job, Duration(2, "hours"))) }
       (fullTables.keys ++ cowTables.keys ++ appends.keys).foreach { name =>
         deleteRec(new java.io.File(s"$root/data/$name/v$version"))
       }
