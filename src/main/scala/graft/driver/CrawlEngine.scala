@@ -1,7 +1,7 @@
 package graft.driver
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -17,12 +17,15 @@ import graft.operators.Stages
  * reference: src/main/scala/es/udc/scrawl/Manager.scala:82-147) re-expressed
  * as batched cycles of pure DataFrame transforms over snapshot tables.
  *
- * Per cycle: DRAIN (window top-k per host) → ROBOTS (gate/synthesize-fetch/
- * defer) → POLITE (per-host budget) → FETCH (join vs corpus) → RESPOND
- * (retry 404 / filter 403,500 / ajax rewrite) → PARSE (extract links +
- * image payload) → DEPTH → ENQUEUE (bloom prefilter + anti-join dedup) →
- * COMMIT (atomic snapshot: frontier COW by hostBucket + robots + output +
- * lineage). All state lives in tables; resume = reopen LATEST snapshot.
+ * Per cycle: DRAIN (window top-k per host) → POLITE (per-host budget) →
+ * ROBOTS (gate; pages of hosts without rules defer, and one robots.txt
+ * request per such host joins the fetch batch) → FETCH (one call of the
+ * configured fetcher or the corpus join, for pages and robots.txt alike) →
+ * RESPOND (retry 404 / filter 403,500 / ajax rewrite; robots.txt responses
+ * become rules) → PARSE (extract links + image payload) → DEPTH → ENQUEUE
+ * (bloom prefilter + anti-join dedup) → COMMIT (atomic snapshot: frontier
+ * COW by hostBucket + robots + output + lineage). All state lives in
+ * tables; resume = reopen LATEST snapshot.
  *
  * Scale notes (north_rule): the frontier is partitioned by a SALTED host
  * hash — `bucket = pmod(xxhash64(host), P)` for normal hosts, spread across
@@ -51,7 +54,6 @@ final class CrawlEngine(
   // hot enqueue projection — registered idempotently per session
   graft.functions.UrlExpressions.register(spark)
   private val corpusPath = s"$workDir/corpus_resolved"
-  private val corpusRobotsPath = s"$workDir/corpus_robots"
   private val imagesPath = s"$workDir/images_resolved"
   private var seenCountEstimate: Long = 0L
   // Upper-bound estimate of next cycle's claimed-batch size (maintained from
@@ -92,7 +94,6 @@ final class CrawlEngine(
   private var recentBloom: Option[Broadcast[SeenSketch]] = None
   private var recentItems: Long = 1L << 17
   private var recentCount: Long = 0L
-  private val RedirectCodes = Seq(301, 302, 303, 307, 308)
 
   /** Rebuild MAIN from the live frontier when it is absent or outgrown, or
     * when RECENT has outgrown its sizing (then RECENT also doubles). */
@@ -122,7 +123,9 @@ final class CrawlEngine(
    * Pre-resolve redirect chains once per run (S4): spray's host connector
    * follows ≤5 redirects transparently (reference.conf:33), keeping the
    * task's original URL. maxRedirects joins at setup time buys a single
-   * equi-join per cycle at fetch time.
+   * equi-join per cycle at fetch time. robots.txt files are ordinary corpus
+   * rows: a wave's robots.txt requests ride its claimed batch through the
+   * same fetch as its pages, so no robots table is derived here.
    */
   def prepareCorpus(): Unit = {
     // materialize the images table once: the input may be a *generated*
@@ -131,16 +134,11 @@ final class CrawlEngine(
     // makes the per-cycle image join a columnar scan instead
     if (!new java.io.File(imagesPath).exists())
       images.write.mode("overwrite").parquet(imagesPath)
-    def ensureRobotsTable(): Unit =
-      if (!new java.io.File(corpusRobotsPath).exists())
-        resolvedCorpus
-          .filter($"src_url".endsWith("/robots.txt"))
-          .write.mode("overwrite").parquet(corpusRobotsPath)
     // a user-supplied bucketed corpus table IS the resolved corpus (the
-    // Iceberg bucket(url) layout): no redirect pre-resolution pass here —
-    // only the small one-row-per-host robots side table is derived from it
-    if (config.bucketedCorpusTable.nonEmpty) { ensureRobotsTable(); return }
-    if (new java.io.File(corpusPath).exists()) { ensureRobotsTable(); return }
+    // Iceberg bucket(url) layout): no redirect pre-resolution pass here
+    if (config.bucketedCorpusTable.nonEmpty || new java.io.File(corpusPath).exists())
+      return
+    val redirecting = $"f_status".isin(HttpFetcher.RedirectCodes.toSeq: _*) && $"next".isNotNull
     val p = pages.select($"url", $"status", $"content_type", $"body",
       $"image_id", $"redirect_to")
     var cur = p.select(
@@ -149,8 +147,8 @@ final class CrawlEngine(
       $"image_id".as("f_image_id"), $"redirect_to".as("next"),
       lit(0).as("hops"))
     for (_ <- 1 to config.maxRedirects) {
-      val pending = cur.filter($"f_status".isin(RedirectCodes: _*) && $"next".isNotNull)
-      val done = cur.filter(!($"f_status".isin(RedirectCodes: _*) && $"next".isNotNull))
+      val pending = cur.filter(redirecting)
+      val done = cur.filter(!redirecting)
       val stepped = pending.select($"src_url", $"next", $"hops")
         .join(p.withColumnRenamed("url", "next"), Seq("next"), "left")
         .select($"src_url",
@@ -163,16 +161,9 @@ final class CrawlEngine(
     // still redirecting after maxRedirects hops ⇒ too-many-redirects error
     cur.withColumn("f_err",
       when($"f_status" === -1, lit(Reasons.connectionError))
-        .when($"f_status".isin(RedirectCodes: _*) && $"next".isNotNull,
-          lit(Reasons.maxRedirects)))
+        .when(redirecting, lit(Reasons.maxRedirects)))
       .drop("next")
       .write.mode("overwrite").parquet(corpusPath)
-    // robots.txt rows land in their own table ONCE at setup: parquet can't
-    // push an EndsWith predicate, so filtering the main corpus would still
-    // column-scan every row's body each robots cycle — a dedicated ~one-
-    // row-per-host table makes the per-cycle robots join O(hosts), not
-    // O(corpus), at any corpus size
-    ensureRobotsTable()
   }
 
   /** The resolved corpus: the user-registered url-bucketed catalog table
@@ -181,14 +172,13 @@ final class CrawlEngine(
     * [[prepareCorpus]]. Schema either way:
     * (src_url, f_status, f_ct, f_body, f_image_id, hops, f_err).
     *
-    * All three tables are immutable for the lifetime of the engine, so the
+    * Both tables are immutable for the lifetime of the engine, so the
     * DataFrames are memoized: a fresh `spark.read.parquet` per wave costs a
     * driver-side directory listing + schema read each time — measurable in
     * the per-wave plan-build budget, pure waste. `lazy` so construction
     * still happens after [[prepareCorpus]] wrote the files. */
   lazy val resolvedCorpus: DataFrame = config.bucketedCorpusTable
     .map(spark.table).getOrElse(spark.read.parquet(corpusPath))
-  lazy val resolvedCorpusRobots: DataFrame = spark.read.parquet(corpusRobotsPath)
   lazy val resolvedImages: DataFrame = spark.read.parquet(imagesPath)
 
   /** Seed injection (S1): depth-0 New rows, deduped (Master.scala:104-113).
@@ -207,25 +197,12 @@ final class CrawlEngine(
       s"$workDir already holds crawl state (snapshot v${snap.latestVersion.get}); " +
         "use resume() or point at a fresh workdir")
     prepareCorpus()
-    val rows = seedsRaw
-      .select(call_function("graft_canonicalize", $"raw").as("url")).filter($"url".isNotNull)
-      .dropDuplicates("url")
-      .withColumn("host", call_function("graft_host", $"url"))
-      .withColumn("depth", lit(0))
-      .withColumn("prio", lit(0L))
-      .withColumn("status", lit(Status.New))
-      .withColumn("started", lit(-1L))
-      .withColumn("retries", lit(0))
-      .withColumn("reason", lit(null).cast("string"))
-      .withColumn("headers",
-        typedlit(Option(headers).getOrElse(config.defaultHeaders)))
-      .withColumn("bucket", bucketCol($"host", $"url"))
+    val rows = newFrontierRows(canonicalSeeds(seedsRaw), lit(0), lit(0L),
+      Option(headers).getOrElse(config.defaultHeaders))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val perBucket = rows.groupBy($"bucket").agg(count(lit(1))).collect()
-    val buckets = perBucket.map(_.getInt(0)).toSet
-    perBucket.foreach(r => bucketRowEst(r.getInt(0)) =
-      bucketRowEst.getOrElse(r.getInt(0), 0L) + r.getLong(1))
-    seenCountEstimate = perBucket.map(_.getLong(1)).sum
+    val perBucket = countPerBucket(rows)
+    val buckets = perBucket.keySet
+    seenCountEstimate = perBucket.values.sum
     expectedBatch = seenCountEstimate
     snap.commit(cycle = 0,
       cowTables = Map("frontier" -> ((rows, "bucket", buckets))),
@@ -273,30 +250,17 @@ final class CrawlEngine(
     val prev = snap.latest.getOrElse(sys.error("engine not initialized"))
     requireBucketCompat(prev)
     val frontier = loadFrontier(prev)
-    val rows = seeds.toDF("raw")
-      .select(call_function("graft_canonicalize", $"raw").as("url")).filter($"url".isNotNull)
-      .dropDuplicates("url")
-      .join(frontier.select("url"), Seq("url"), "left_anti")
-      .withColumn("host", call_function("graft_host", $"url"))
-      .withColumn("depth", lit(0))
-      .withColumn("prio", lit(prev.cycle))
-      .withColumn("status", lit(Status.New))
-      .withColumn("started", lit(-1L))
-      .withColumn("retries", lit(0))
-      .withColumn("reason", lit(null).cast("string"))
-      .withColumn("headers",
-        typedlit(Option(headers).getOrElse(config.defaultHeaders)))
-      .withColumn("bucket", bucketCol($"host", $"url"))
+    val rows = newFrontierRows(
+        canonicalSeeds(seeds.toDF("raw")).join(frontier.select("url"), Seq("url"), "left_anti"),
+        lit(0), lit(prev.cycle), Option(headers).getOrElse(config.defaultHeaders))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val perBucket = rows.groupBy($"bucket").agg(count(lit(1))).collect()
-    val touched = perBucket.map(_.getInt(0)).toSet
-    perBucket.foreach(r => bucketRowEst(r.getInt(0)) =
-      bucketRowEst.getOrElse(r.getInt(0), 0L) + r.getLong(1))
+    val perBucket = countPerBucket(rows)
+    val touched = perBucket.keySet
     val added = if (touched.isEmpty) 0L else {
       val next = frontier
         .filter($"bucket".isin(touched.toSeq: _*))
         .unionByName(rows.select(frontier.columns.map(col): _*))
-      val n = perBucket.map(_.getLong(1)).sum
+      val n = perBucket.values.sum
       snap.commit(prev.cycle,
         cowTables = Map("frontier" -> ((next, "bucket", touched))),
         metrics = Map("seeds_added" -> n.toDouble,
@@ -323,11 +287,34 @@ final class CrawlEngine(
     added
   }
 
+  /** Distinct canonical urls of a `raw` url column; unparseable urls drop. */
+  private def canonicalSeeds(raw: DataFrame): DataFrame =
+    raw.select(call_function("graft_canonicalize", $"raw").as("url"))
+      .filter($"url".isNotNull).dropDuplicates("url")
+
+  /** New frontier rows for a `url` column: every enqueue path (seeds,
+    * mid-crawl seeds, a wave's unseen links) builds its rows here. */
+  private def newFrontierRows(urls: DataFrame, depth: Column, prio: Column,
+      headers: Map[String, String]): DataFrame =
+    urls.select($"url", call_function("graft_host", $"url").as("host"),
+        depth.as("depth"), prio.as("prio"), lit(Status.New).as("status"),
+        lit(-1L).as("started"), lit(0).as("retries"),
+        lit(null).cast("string").as("reason"), typedlit(headers).as("headers"))
+      .withColumn("bucket", bucketCol($"host", $"url"))
+
+  /** Per-bucket row counts of `rows` (one job), added to the hot-host row
+    * estimates. */
+  private def countPerBucket(rows: DataFrame): Map[Int, Long] = {
+    val perBucket = rows.groupBy($"bucket").agg(count(lit(1))).as[(Int, Long)]
+      .collect().toMap
+    perBucket.foreach { case (b, n) => bucketRowEst(b) = bucketRowEst.getOrElse(b, 0L) + n }
+    perBucket
+  }
+
   /** The frontier placement function: plain host bucket, or url-salted for
     * promoted hot hosts — every site that assigns or re-derives a frontier
     * row's bucket MUST go through this one definition. */
-  private def bucketCol(host: org.apache.spark.sql.Column,
-      url: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def bucketCol(host: Column, url: Column): Column =
     saltedHostBucket(host, url, config.numBuckets, config.hotHostSalts, hotHosts)
 
   /** Load the persisted hot-host set for snapshot `s` (memoized per
@@ -349,7 +336,7 @@ final class CrawlEngine(
   /** Robots state, bucketed by the SAME hostBucket as the frontier (the
     * bucket column is re-derived from host after load, like loadFrontier —
     * COW dirs drop it via partitionBy). Absent table (fresh workdir) =
-    * empty: the first cycle synthesizes every needed robots fetch. */
+    * empty: the first cycle requests every needed robots.txt. */
   def loadRobots(s: Snapshot): DataFrame =
     snap.readTable(s, "robots")
       .getOrElse(spark.emptyDataset[RobotsRow].toDF())
@@ -484,59 +471,26 @@ final class CrawlEngine(
     val denied = withRobots.filter($"fetched_cycle".isNotNull && !$"robots_ok")
     val allowed = withRobots.filter($"robots_ok")
 
-    // hosts lacking robots: synthesize ONE robots fetch per authority this
-    // cycle, carrying THE SAME HEADERS as the (deterministically first)
-    // page request that triggered it — reference RobotsFilter.scala:63-68,
-    // asserted by RobotsFilterTest.scala:38-60. Their page rows stay New
-    // (deferral ≙ the reference's `waiting` queue, ≤1 extra cycle latency).
-    val robotsFetch = robotsUnknown.groupBy($"host")
-      .agg(min($"url").as("any_url"),
-        min_by($"headers", $"url").as("req_headers"))
-      .select($"host", concat(split($"any_url", "/")(0), lit("//"), $"host",
-        lit("/robots.txt")).as("src_url"), $"req_headers")
-    // the robots corpus scan is pruned by a pushed EndsWith filter (~one
-    // row per host) and joined with the SAME broadcast hits/misses shape as
-    // the page fetch: a plain `robotsFetch LEFT JOIN corpus` would stream —
-    // or worse, shuffle — the ENTIRE corpus every cycle to serve a
-    // left-preserved tiny side, even on cycles with zero pending robots
-    val corpusRobots = resolvedCorpusRobots
-    val robotsHits = corpusRobots.join(broadcast(robotsFetch), Seq("src_url"), "inner")
-    // the semi probe broadcasts the SAME relation as the hits join (not a
-    // url-only projection) so the physical plan reuses one
-    // BroadcastExchange instead of building two
-    val robotsMisses = robotsFetch.join(
-        broadcast(corpusRobots.select($"src_url")
-          .join(broadcast(robotsFetch), Seq("src_url"), "left_semi")),
-        Seq("src_url"), "left_anti")
-      .withColumns(Map( // one batched analysis: each withColumn re-analyzes the whole subtree
-        "f_status" -> lit(null).cast("int"),
-        "f_err" -> lit(null).cast("string"),
-        "f_body" -> lit(null).cast("string")))
-    val robotsResp = robotsHits
-      .select($"host", $"req_headers", $"f_status", $"f_err", $"f_body")
-      .unionByName(robotsMisses
-        .select($"host", $"req_headers", $"f_status", $"f_err", $"f_body"))
-      .select($"host",
-        when($"f_status" === 200 && $"f_err".isNull,
-          robotsParseUdf($"f_body")).otherwise(lit(null)).as("parsed"),
-        $"f_status", $"f_err", $"req_headers")
-    // 200+parse-ok ⇒ rules; 200+parse-fail / non-200 / missing / error ⇒ all
-    // allowed (RobotsFilter.scala:74-81, 99-103, 110-119)
-    val robotsNew = robotsResp.select($"host",
-      ($"parsed".isNull).as("all_allowed"),
-      $"parsed".as("rules"), lit(cycle).as("fetched_cycle"), $"req_headers")
-      .withColumn("bucket", hostBucket($"host", config.numBuckets))
-      .localCheckpoint(false)
-    val robotsOut = robots.unionByName(robotsNew)
+    // hosts lacking robots: ONE robots.txt request per authority joins this
+    // wave's fetch batch, carrying THE SAME HEADERS as the (deterministically
+    // first) page request that triggered it — reference RobotsFilter.scala:
+    // 63-68, asserted by RobotsFilterTest.scala:38-60. It is marked
+    // depth = -1 (a crawl depth is never negative). Its host's page rows
+    // stay New (deferral ≙ the reference's `waiting` queue, ≤1 extra cycle
+    // latency).
+    val robotsRequests = robotsUnknown.groupBy($"host")
+      .agg(min($"url").as("any_url"), min_by($"headers", $"url").as("headers"))
+      .select(concat(split($"any_url", "/")(0), lit("//"), $"host",
+          lit("/robots.txt")).as("url"),
+        $"host", hostBucket($"host", config.numBuckets).as("bucket"),
+        lit(-1).as("depth"), lit(cycle).as("prio"), lit(0).as("retries"), $"headers")
 
-    // ---- 4. FETCH (S3/S4): stream the corpus ONCE against broadcast batch
-    // keys (reference Downloader.scala:30-49). A shuffle join here would
-    // move the ENTIRE corpus — body column included — across the cluster
-    // every micro-cycle; instead the claimed batch broadcasts into the
-    // corpus scan (inner join = hits, bodies never leave their partitions),
-    // and fetch misses (connection errors) come from a second, column-pruned
-    // url-only pass. Batch size is bounded by hostBudget/globalBatchCap, so
-    // the broadcast stays executor-memory-sized at any frontier scale.
+    // ---- 4. FETCH (S3/S4): ONE fetch per wave, pages and robots.txt alike,
+    // as RobotsFilter hands its request to the Downloader like any other
+    // (reference Downloader.scala:30-49): the configured fetcher, or the
+    // corpus join (see corpusFetch). The batch is bounded by hostBudget /
+    // globalBatchCap plus one robots row per host, so broadcasting it stays
+    // executor-memory-sized at any frontier scale.
     // headers ride along: the pluggable-stage contract (operators/Stages
     // .scala) exposes the wide fetch row INCLUDING per-request headers —
     // the reference's stages receive the full Response with its headers
@@ -544,29 +498,32 @@ final class CrawlEngine(
     // broadcast bytes, but the batch is politeness/cap-bounded and default
     // headers are a handful of entries.
     val claimed = allowed.select($"url", $"host", $"bucket", $"depth",
-      $"prio", $"retries", $"headers").localCheckpoint(false)
+        $"prio", $"retries", $"headers")
+      .unionByName(robotsRequests).localCheckpoint(false)
     val fetched = config.fetcher match {
       case Some(fetch) =>
         // injected fetcher (S3 production seam, CrawlConfig.fetcher): the
         // claimed batch goes in, wide fetch rows come out — the engine
         // neither knows nor cares whether rows came from the corpus join
         // or a live HTTP client; parity vs the default is pinned in
-        // EngineParitySpec ("fetcher seam")
+        // EngineParitySpec ("fetcher seam") and HttpFetcherSpec
         fetch(claimed)
       case None => corpusFetch(claimed, bigBatch)
     }
     // ---- 5. RESPOND: the pluggable response-leg stage chain -------------
     // reference.conf:66-71 traversed right-to-left: RetryHttpError →
-    // FilterHttpError → AjaxLinksTransform (RobotsFilter's response leg is
-    // the robots-cache step above). The chain is config-driven
+    // FilterHttpError → AjaxLinksTransform. The chain is config-driven
     // (CrawlConfig.responseStages ≙ the reference's reflective stage list,
     // Pipeline.scala:39-46); the Downloader's own error channel (connection
-    // failures, Downloader.scala:44-48) is tagged before any stage runs.
+    // failures, Downloader.scala:44-48) is tagged before any stage runs, and
+    // robots.txt rows are tagged ROBOTS, so stages (which touch only rows
+    // whose outcome is null) pass them through.
     val preTagged = fetched
       .withColumns(Map(
         "outcome" ->
-          when($"f_err".isNotNull || $"f_status".isNull || $"f_status" === -1,
-            lit("ERROR")).otherwise(lit(null).cast("string")),
+          when($"depth" === -1, lit("ROBOTS"))
+            .when($"f_err".isNotNull || $"f_status".isNull || $"f_status" === -1,
+              lit("ERROR")).otherwise(lit(null).cast("string")),
         "reason" ->
           when($"f_err".isNotNull, $"f_err")
             .when($"f_status".isNull, lit(Reasons.connectionError))))
@@ -574,10 +531,13 @@ final class CrawlEngine(
       Stages.retryHttpError(config.retryCodes, config.maxRetries),
       Stages.filterHttpError(config.filterCodes),
       Stages.ajaxRewrite))
+    // the body's consumers run BEFORE the wave leaf: link extraction for OK
+    // pages, and for robots.txt the reference's cache step —
+    // 200 + parse-ok ⇒ rules; 200 + parse-fail / non-200 / missing / error
+    // ⇒ null rules = all allowed (RobotsFilter.scala:74-81, 99-103, 110-119).
     // CACHE SLIMMING (bandwidth at scale): when both downstream hooks are
-    // the defaults, the body's LAST consumer is the link extraction — so
-    // extract links BEFORE checkpointing and drop f_body/f_ct from the
-    // wave leaf. Otherwise the two fattest wave leaves (`responded`, `ok`)
+    // the defaults, nothing else reads f_body/f_ct, so they are dropped from
+    // the leaf. Otherwise the two fattest wave leaves (`responded`, `ok`)
     // each hold every fetched body for the whole wave: cache fill + the 2-3
     // downstream reads stream those bytes through memory again, and on the
     // single-box bench that traffic contends with the shuffle/COW writes
@@ -586,32 +546,33 @@ final class CrawlEngine(
     val slimWave = config.extractInfo.isEmpty && config.resultStages.isEmpty
     val respondedWide = responseChain.foldLeft(preTagged)((df, s) => s(df))
       .withColumn("outcome", coalesce($"outcome", lit("OK")))
-    val responded = (if (slimWave)
-        respondedWide
-          .withColumn("links",
-            when($"outcome" === "OK", extractLinksUdf($"f_body", $"url", $"f_ct")))
-          .drop("f_body", "f_ct")
-      else respondedWide)
+      .withColumns(Map(
+        "links" -> when($"outcome" === "OK", extractLinksUdf($"f_body", $"url", $"f_ct")),
+        "rules" -> when($"outcome" === "ROBOTS" && $"f_status" === 200 && $"f_err".isNull,
+          robotsParseUdf($"f_body"))))
+    val responded = (if (slimWave) respondedWide.drop("f_body", "f_ct") else respondedWide)
       .localCheckpoint(false)
+    val robotsNew = responded.filter($"outcome" === "ROBOTS")
+      .select($"host", $"rules".isNull.as("all_allowed"), $"rules",
+        lit(cycle).as("fetched_cycle"), $"headers".as("req_headers"), $"bucket")
+    val robotsOut = robots.unionByName(robotsNew)
 
     // ---- 6. PARSE (X1/X2) + 7. result-leg stage chain (P8 by default) ---
     // ajax rewrite already mutated f_body in the response chain; the
-    // Crawler extracts links for every OK page and the RESULT stages
-    // (default: MaxDepthFilter) then prune them — exactly the reference's
+    // Crawler extracted links for every OK page above and the RESULT stages
+    // (default: MaxDepthFilter) now prune them — exactly the reference's
     // Crawler → result-pipeline traversal (Manager.scala:137-147)
-    val parsed =
-      if (slimWave) responded.filter($"outcome" === "OK")
-      else responded.filter($"outcome" === "OK")
-        .withColumn("links", extractLinksUdf($"f_body", $"url", $"f_ct"))
+    val parsed = responded.filter($"outcome" === "OK").drop("rules")
     val resultChain = config.resultStages
       .getOrElse(Seq(Stages.maxDepth(config.maxDepth)))
     val ok = resultChain.foldLeft(parsed)((df, s) => s(df))
       .localCheckpoint(false)
 
-    // outcomes ledger for the claimed batch (O6/O7) + robots denials
+    // outcomes ledger for the claimed pages (O6/O7) + robots denials
     // (RobotsFilter.scala:58-61 — deny ⇒ Error(task, RobotsPathFiltered(ua)))
-    val outcomes = responded.select($"url", $"host", $"bucket", $"depth",
-      $"prio", $"retries", $"outcome", $"reason")
+    val outcomes = responded.filter($"outcome" =!= "ROBOTS")
+      .select($"url", $"host", $"bucket", $"depth",
+        $"prio", $"retries", $"outcome", $"reason")
       .unionByName(denied.select($"url", $"host", $"bucket", $"depth",
         $"prio", $"retries", lit("ERROR").as("outcome"),
         lit(Reasons.robotsPathFiltered(config.userAgent)).as("reason")))
@@ -705,18 +666,11 @@ final class CrawlEngine(
         }
       else frontier.select("url") // most buckets touched: cached full scan wins
     val confirmed = maybe.join(seenSide, Seq("url"), "left_anti")
-    val newRows = definitelyNew.unionByName(confirmed)
-      .withColumn("host", call_function("graft_host", $"url"))
-      .withColumn("bucket", bucketCol($"host", $"url"))
-      .withColumn("prio", lit(cycle))
-      .withColumn("status", lit(Status.New))
-      .withColumn("started", lit(-1L))
-      .withColumn("retries", lit(0))
-      .withColumn("reason", lit(null).cast("string"))
-      // child requests get fresh default headers, exactly as the reference
-      // Manager issues Request(task, Map()) for every pulled task
-      // (Manager.scala:100-110) — headers are per-request, not inherited
-      .withColumn("headers", typedlit(config.defaultHeaders))
+    // child requests get fresh default headers, exactly as the reference
+    // Manager issues Request(task, Map()) for every pulled task
+    // (Manager.scala:100-110) — headers are per-request, not inherited
+    val newRows = newFrontierRows(definitelyNew.unionByName(confirmed),
+        $"depth", lit(cycle), config.defaultHeaders)
       .localCheckpoint(false)
 
     // ---- per-bucket lineage / metrics in ONE action ---------------------
@@ -771,8 +725,9 @@ final class CrawlEngine(
     val dedupCount = linksCount - enqueuedCount
     val deferredRobots = one("robdef")
     val robotsFetched = robnewStats.map(_.getLong(2)).sum
-    // polite == allowed(=outcomes minus denied... exactly claimed+denied) +
-    // robots-deferred, so its count derives from branches already collected:
+    // polite = allowed + denied + robots-deferred, and outcomes holds exactly
+    // the allowed and denied pages (robots.txt rows excluded), so its count
+    // derives from branches already collected:
     // polite = |outcomes| + |robotsUnknown| — one fewer stats branch per cycle
     val deferredPolite = one("drainable") - (drainedCount + one("robdef"))
     seenCountEstimate += enqueuedCount

@@ -33,6 +33,10 @@ import graft.urls.CUrl
  *    repartition below shuffles only narrow key rows; the fetched BODIES
  *    are born on the fetching executor and never shuffle (exactly the
  *    property the corpus-join strategies preserve);
+ *  - the batch also holds the wave's robots.txt requests (one per host
+ *    without known rules, marked `depth = -1`, carrying the triggering page
+ *    request's headers): they are fetched like any other row, so a live
+ *    crawl obeys the robots.txt its servers serve (RFC 9309);
  *  - `repartition(host)` keeps one authority's requests on one task for
  *    connection reuse and per-host serialization (the per-cycle volume per
  *    host is already ≤ hostBudget, enforced upstream by O12);
@@ -55,7 +59,9 @@ object HttpFetcher {
       f_image_id: Option[String], hops: Int, f_err: Option[String])
 
   private val ImgRe = """<img src="/([^"]+)">""".r
-  private val RedirectCodes = Set(301, 302, 303, 307, 308)
+  /** HTTP statuses followed as redirects — here and by the corpus' offline
+    * resolution (CrawlEngine.prepareCorpus). */
+  private[driver] val RedirectCodes = Set(301, 302, 303, 307, 308)
   // hop-by-hop / client-managed headers HttpRequest refuses to set manually
   private val RestrictedHeaders =
     Set("host", "connection", "content-length", "upgrade")

@@ -151,11 +151,15 @@ final case class CrawlConfig(
     resultStages: Option[Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame]] = None,
     extractInfo: Option[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] = None,
     /** S3's production seam — the reference's Downloader
-      * (reference Downloader.scala:30-49) as an injectable function. Input:
-      * the claimed batch `(url, host, bucket, depth, prio, retries,
-      * headers)` — politeness/robots-gated, bounded by hostBudget /
-      * globalBatchCap per cycle. Output contract: exactly one row per
-      * claimed url, the input columns preserved, plus
+      * (reference Downloader.scala:30-49) as an injectable function, called
+      * ONCE per wave. Input: the claimed batch `(url, host, bucket, depth,
+      * prio, retries, headers)` — the politeness/robots-gated page requests,
+      * bounded by hostBudget / globalBatchCap per cycle, plus one
+      * `scheme://host/robots.txt` request per host whose rules are not yet
+      * known, marked `depth = -1` and carrying the headers of the page
+      * request that triggered it (reference RobotsFilter.scala:63-68).
+      * Output contract: exactly one row per input row, robots rows
+      * included, the input columns preserved, plus
       * `f_status:int` (null or -1 ⇒ connection error), `f_ct:string`,
       * `f_body:string`, `f_image_id:string`, `hops:int`,
       * `f_err:string` (non-null ⇒ pre-classified fetch error).

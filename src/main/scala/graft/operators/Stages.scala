@@ -27,7 +27,10 @@ import graft.functions.CrawlFunctions.ajaxRewriteUdf
  * a stage tags rows ERROR/RETRY (and must only touch rows still passing,
  * preserving upstream stages' verdicts — exactly the first-stage-wins
  * traversal order of the actor chain). After the fold the engine coalesces
- * the remaining NULLs to OK.
+ * the remaining NULLs to OK. The batch also carries the wave's robots.txt
+ * responses (`depth = -1`), tagged `outcome = "ROBOTS"` before the fold:
+ * stages that touch only passing rows leave them unchanged, and the engine
+ * turns them into robots rules, never into outcomes or links.
  *
  * Result-leg stages run on parsed rows carrying a `links` array column
  * (the reference result pipeline, MaxDepthFilter.scala:11-23).

@@ -8,7 +8,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.Fixtures
 import graft.driver.{CrawlEngine, HttpFetcher}
-import graft.model.{CrawlConfig, PageRow, Reasons}
+import graft.model.{CrawlConfig, PageRow, Reasons, Status}
 
 /**
  * The production HTTP fetcher behind the S3 seam, tested fully offline
@@ -16,17 +16,26 @@ import graft.model.{CrawlConfig, PageRow, Reasons}
  * the same scenarios the reference drives against its live in-process
  * server (reference DownloaderTest.scala:20-98: GET → Response with
  * status passthrough, redirect following, connection error → Error),
- * plus an e2e fixture crawl over localhost asserting byte-identical
- * state vs the default corpus-join engine.
+ * plus e2e fixture crawls over localhost asserting byte-identical state
+ * vs the default corpus-join engine, robots.txt included.
  */
 class HttpFetcherSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def withServer(routes: Map[String, (Int, Map[String, String], String)])(
-      body: Int => Unit): Unit = {
+  /** path → (status, response headers, body) */
+  private type Routes = Map[String, (Int, Map[String, String], String)]
+
+  /** Serve `routes(port)` on a loopback port (unknown paths: 404) while
+    * `body(port)` runs; returns every request seen as (path, User-Agent). */
+  private def withServer(routes: Int => Routes)(body: Int => Unit): Seq[(String, String)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val port = server.getAddress.getPort
+    val served = routes(port)
     server.createContext("/", (x: HttpExchange) => {
-      val (status, headers, resp) = routes.getOrElse(x.getRequestURI.getPath,
+      val path = x.getRequestURI.getPath
+      seen.add(path -> x.getRequestHeaders.getFirst("User-Agent"))
+      val (status, headers, resp) = served.getOrElse(path,
         (404, Map("Content-Type" -> "text/plain"), "not found"))
       headers.foreach { case (k, v) => x.getResponseHeaders.set(k, v) }
       val bytes = resp.getBytes(StandardCharsets.UTF_8)
@@ -35,8 +44,9 @@ class HttpFetcherSpec extends AnyFunSuite {
       x.close()
     })
     server.start()
-    try body(server.getAddress.getPort)
+    try body(port)
     finally server.stop(0)
+    seen.toArray(Array.empty[(String, String)]).toSeq
   }
 
   private def client: HttpClient = HttpClient.newBuilder()
@@ -56,7 +66,7 @@ class HttpFetcherSpec extends AnyFunSuite {
       "/ok" -> ((200, Map("Content-Type" -> "text/html"), "<html>hi</html>")),
       "/missing" -> ((404, Map("Content-Type" -> "text/plain"), "")),
       "/forbidden" -> ((403, Map("Content-Type" -> "text/plain"), "no")))
-    withServer(routes) { port =>
+    withServer(_ => routes) { port =>
       val ok = fetch(s"http://127.0.0.1:$port/ok")
       assert(ok.f_status === Some(200))
       assert(ok.f_ct === Some("text/html"))
@@ -69,7 +79,7 @@ class HttpFetcherSpec extends AnyFunSuite {
   }
 
   test("redirect chains are followed <= maxRedirects, row keeps its original url") {
-    withServer(Map(
+    withServer(_ => Map(
       "/r0" -> ((302, Map("Location" -> "/r1"), "")),
       "/r1" -> ((301, Map("Location" -> "/r2"), "")),
       "/r2" -> ((200, Map("Content-Type" -> "text/html"), "final")))) { port =>
@@ -85,7 +95,7 @@ class HttpFetcherSpec extends AnyFunSuite {
   test("more than maxRedirects hops => MaxRedirectsReached (reference.conf:33)") {
     val chain = (0 until 8).map(i =>
       s"/l$i" -> ((301, Map("Location" -> s"/l${i + 1}"), ""))).toMap
-    withServer(chain) { port =>
+    withServer(_ => chain) { port =>
       val r = fetch(s"http://127.0.0.1:$port/l0")
       assert(r.f_err === Some(Reasons.maxRedirects))
       assert(r.f_body === None)
@@ -105,63 +115,57 @@ class HttpFetcherSpec extends AnyFunSuite {
 
   // ---- e2e: live-HTTP crawl == corpus-join crawl, byte for byte ---------
 
-  test("e2e localhost crawl matches the corpus-join engine byte-identically") {
-    import org.apache.spark.sql.DataFrame
-    // site3 shape + a redirect hop, rehosted on the loopback authority; the
-    // bodies embed images + captions exactly like Fixtures.pageWithImage
-    def sitePages(base: String): Seq[PageRow] = {
-      def img(url: String, id: String, hrefs: String*) = {
-        val caption = graft.image.ImageCodec.caption(id)
-        Fixtures.page(url,
-          s"""<html><body>${hrefs.map(h => s"""<a href="$h">l</a>""").mkString}""" +
-            s"""<img src="/$id"><p>$caption</p></body></html>""", imageId = id)
-      }
-      Seq(
-        img(s"$base/", "img-http-root", "/resource", "/stuff", "/hop0"),
-        img(s"$base/resource", "img-http-resource"),
-        img(s"$base/stuff", "img-http-stuff"),
-        Fixtures.page(s"$base/hop0", "", status = 301, redirectTo = s"$base/hop1"),
-        img(s"$base/hop1", "img-http-hop1"))
+  // site3 shape + a redirect hop, rehosted on the loopback authority; the
+  // bodies embed images + captions exactly like Fixtures.pageWithImage
+  private def sitePages(base: String): Seq[PageRow] = {
+    def img(url: String, id: String, hrefs: String*) = {
+      val caption = graft.image.ImageCodec.caption(id)
+      Fixtures.page(url,
+        s"""<html><body>${hrefs.map(h => s"""<a href="$h">l</a>""").mkString}""" +
+          s"""<img src="/$id"><p>$caption</p></body></html>""", imageId = id)
     }
-    val sock = new java.net.ServerSocket(0, 1, java.net.InetAddress.getByName("127.0.0.1"))
-    val port = sock.getLocalPort
-    sock.close()
-    val base = s"http://127.0.0.1:$port"
-    val pages = sitePages(base)
-    val routes = pages.map { p =>
-      val path = p.url.stripPrefix(base) match { case "" => "/"; case s => s }
-      if (p.redirect_to != null)
-        path -> ((p.status, Map("Location" -> p.redirect_to.stripPrefix(base)), ""))
-      else
-        path -> ((p.status, Map("Content-Type" -> p.content_type), p.body))
-    }.toMap
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/", (x: HttpExchange) => {
-      val (status, headers, resp) = routes.getOrElse(x.getRequestURI.getPath,
-        (404, Map("Content-Type" -> "text/plain"), "not found"))
-      headers.foreach { case (k, v) => x.getResponseHeaders.set(k, v) }
-      val bytes = resp.getBytes(StandardCharsets.UTF_8)
-      x.sendResponseHeaders(status, if (bytes.isEmpty) -1 else bytes.length.toLong)
-      if (bytes.nonEmpty) x.getResponseBody.write(bytes)
-      x.close()
-    })
-    server.start()
-    try {
-      import spark.implicits._
-      val seeds = Seq(s"$base/")
-      def run(cfg: CrawlConfig): CrawlEngine = {
-        val dir = java.nio.file.Files.createTempDirectory("graft-httpe2e").toString
-        val images = Fixtures.imagesFor(pages)
-        val engine = new CrawlEngine(spark, cfg,
-          spark.createDataset(pages).toDF(),
-          spark.createDataset(images).toDF(), dir)
-        engine.run(seeds)
-        engine
-      }
-      val defEngine = run(CrawlConfig())
-      val httpEngine = run(CrawlConfig(
-        fetcher = Some(HttpFetcher("GraftBot/0.1", maxRedirects = 5))))
-      def dump(df: DataFrame) = df.toJSON.collect().sorted.toSeq
+    Seq(
+      img(s"$base/", "img-http-root", "/resource", "/stuff", "/hop0"),
+      img(s"$base/resource", "img-http-resource"),
+      img(s"$base/stuff", "img-http-stuff"),
+      Fixtures.page(s"$base/hop0", "", status = 301, redirectTo = s"$base/hop1"),
+      img(s"$base/hop1", "img-http-hop1"))
+  }
+
+  private def base(port: Int) = s"http://127.0.0.1:$port"
+
+  /** The pages as loopback routes (redirects as relative Locations). */
+  private def routesOf(port: Int, pages: Seq[PageRow]): Routes = pages.map { p =>
+    val path = p.url.stripPrefix(base(port)) match { case "" => "/"; case s => s }
+    if (p.redirect_to != null)
+      path -> ((p.status, Map("Location" -> p.redirect_to.stripPrefix(base(port))), ""))
+    else
+      path -> ((p.status, Map("Content-Type" -> p.content_type), p.body))
+  }.toMap
+
+  /** Crawl `corpus` from the loopback root; the image table always holds
+    * the images of `pages`, so live and corpus crawls validate alike. */
+  private def crawl(port: Int, pages: Seq[PageRow], corpus: Seq[PageRow],
+      cfg: CrawlConfig): CrawlEngine = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-httpe2e").toString
+    val engine = new CrawlEngine(spark, cfg,
+      spark.createDataset(corpus).toDF(),
+      spark.createDataset(Fixtures.imagesFor(pages)).toDF(), dir)
+    engine.run(Seq(s"${base(port)}/"))
+    engine
+  }
+
+  private val liveConfig = CrawlConfig(
+    fetcher = Some(HttpFetcher("GraftBot/0.1", maxRedirects = 5)))
+
+  private def dump(df: org.apache.spark.sql.DataFrame) = df.toJSON.collect().sorted.toSeq
+
+  test("e2e localhost crawl matches the corpus-join engine byte-identically") {
+    withServer(port => routesOf(port, sitePages(base(port)))) { port =>
+      val pages = sitePages(base(port))
+      val defEngine = crawl(port, pages, pages, CrawlConfig())
+      val httpEngine = crawl(port, pages, pages, liveConfig)
       assert(dump(httpEngine.frontierNow) === dump(defEngine.frontierNow),
         "frontier must be identical across live-HTTP and corpus fetchers")
       assert(dump(httpEngine.outputNow) === dump(defEngine.outputNow),
@@ -171,6 +175,29 @@ class HttpFetcherSpec extends AnyFunSuite {
       // linked, so it is fetched only through the redirect
       assert(httpEngine.visited.count() === 4)
       assert(httpEngine.outputNow.count() === 4)
-    } finally server.stop(0)
+    }
+  }
+
+  test("live crawl fetches robots.txt over HTTP and obeys it (RFC 9309)") {
+    import org.apache.spark.sql.functions.col
+    def robotsPage(port: Int) = Fixtures.page(s"${base(port)}/robots.txt",
+      "User-agent: *\nDisallow: /stuff\n", ct = "text/plain")
+    val seen = withServer(port => routesOf(port,
+        sitePages(base(port)) :+ robotsPage(port))) { port =>
+      val pages = sitePages(base(port))
+      // the live engine's corpus is EMPTY: robots.txt can only come over HTTP
+      val live = crawl(port, pages, Nil, liveConfig)
+      val corpusEngine = crawl(port, pages, pages :+ robotsPage(port), CrawlConfig())
+      assert(dump(live.frontierNow) === dump(corpusEngine.frontierNow),
+        "frontier must be identical across live-HTTP and corpus fetchers")
+      val stuff = live.frontierNow.filter(col("url") === s"${base(port)}/stuff")
+        .select("status", "reason").collect().map(r => (r.getString(0), r.getString(1)))
+        .toSeq
+      assert(stuff === Seq((Status.WithError,
+        Reasons.robotsPathFiltered(CrawlConfig().userAgent))))
+    }
+    val robotsGets = seen.filter(_._1 == "/robots.txt")
+    assert(robotsGets === Seq(("/robots.txt", "GraftBot/0.1")),
+      "exactly one robots.txt GET, sent with the fetcher's User-Agent")
   }
 }
