@@ -16,8 +16,9 @@ import graft.urls.CUrl
  * src/main/scala/es/udc/scrawl/Downloader.scala:30-49, asserted by
  * DownloaderTest.scala:20-98):
  *
- *  - GET with the row's request headers (plus the configured User-Agent
- *    when the row carries none) → status/content-type/body passthrough;
+ *  - GET with the row's request headers, plus the configured User-Agent
+ *    unless a header named User-Agent (any case) is already among them →
+ *    status/content-type/body passthrough;
  *  - connection-level failure → `f_err = ConnectionError` (the reference's
  *    Error(task, reason) channel, Downloader.scala:44-48);
  *  - redirects followed HERE, not by the client (Redirect.NEVER): the
@@ -99,10 +100,11 @@ object HttpFetcher {
       val b = HttpRequest.newBuilder(URI.create(target))
         .timeout(Duration.ofMillis(requestTimeoutMs.toLong))
         .GET()
-      val hdrs =
-        if (c.headers != null && c.headers.nonEmpty) c.headers
-        else Map("User-Agent" -> userAgent)
-      hdrs.foreach { case (k, v) =>
+      val hdrs = Option(c.headers).getOrElse(Map.empty[String, String])
+      val withAgent =
+        if (hdrs.keys.exists(_.equalsIgnoreCase("user-agent"))) hdrs
+        else hdrs + ("User-Agent" -> userAgent)
+      withAgent.foreach { case (k, v) =>
         if (!RestrictedHeaders.contains(k.toLowerCase)) b.header(k, v) }
       val resp =
         try client.send(b.build(), HttpResponse.BodyHandlers.ofString())

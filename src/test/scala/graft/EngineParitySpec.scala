@@ -377,6 +377,31 @@ class EngineParitySpec extends AnyFunSuite {
     assert(visited.contains("http://bb.test/") && visited.contains("http://bb.test/loop"))
   }
 
+  test("a wave of more than 50,000 links folds into RECENT by a distributed build, dedup stays exact") {
+    // above 50,000 links runWave stops collecting urls to the driver and
+    // merges a sketch built from the wave's new rows into RECENT
+    val leaves = (0 to 50000).map(i => s"http://leaf${i % 4}.test/p$i")
+    val relinked = leaves(7)
+    val pages = Seq(
+      Fixtures.page("http://hub.test/",
+        (leaves :+ "/back").map(h => s"""<a href="$h">l</a>""").mkString("<html><body>", "", "</body></html>")),
+      Fixtures.page("http://hub.test/back", s"""<html><body><a href="$relinked">l</a></body></html>""")) ++
+      leaves.map(u => Fixtures.page(u, "<html><body></body></html>"))
+    val dir = Files.createTempDirectory("graft-bigwave").toString
+    val engine = new CrawlEngine(spark, CrawlConfig(maxDepth = 3, hostBudget = Int.MaxValue / 2),
+      spark.createDataset(pages).toDF(), spark.emptyDataset[ImageRow].toDF(), dir)
+    engine.run(Seq("http://hub.test/"))
+    val waveEnqueued = engine.lineageNow.groupBy("cycle")
+      .agg(org.apache.spark.sql.functions.sum("enqueued").as("e"))
+      .agg(org.apache.spark.sql.functions.max("e")).as[Long].head()
+    assert(waveEnqueued > 50000, "no wave reached the distributed RECENT merge")
+    val frontier = engine.frontierNow.select("url", "depth").as[(String, Int)].collect()
+    assert(frontier.filter(_._1 == relinked).map(_._2).toSeq === Seq(1),
+      "the leaf /back links to again must keep one frontier row at depth 1")
+    assert(frontier.length === frontier.map(_._1).distinct.length, "a url appears twice")
+    assert(frontier.length === leaves.size + 2)
+  }
+
   test("globalBatchCap: bounded cycles via per-bucket quotas, full parity") {
     val cfg = CrawlConfig(maxDepth = 10, globalBatchCap = 7)
     val (e, o) = runBoth(Fixtures.hotHost, Fixtures.hotHostSeeds, cfg)

@@ -113,6 +113,14 @@ class HttpFetcherSpec extends AnyFunSuite {
     assert(r.f_status === None)
   }
 
+  test("the configured User-Agent rides along with a row's own headers") {
+    val seen = withServer(_ => Map("/h" -> ((200, Map("Content-Type" -> "text/plain"), "ok")))) { port =>
+      val row = claimed(s"http://127.0.0.1:$port/h").copy(headers = Map("X-Test" -> "1"))
+      assert(HttpFetcher.fetchOne(client, row, "GraftBot/0.1", 5, 5000).f_status === Some(200))
+    }
+    assert(seen === Seq(("/h", "GraftBot/0.1")))
+  }
+
   // ---- e2e: live-HTTP crawl == corpus-join crawl, byte for byte ---------
 
   // site3 shape + a redirect hop, rehosted on the loopback authority; the
@@ -157,7 +165,7 @@ class HttpFetcherSpec extends AnyFunSuite {
   }
 
   private val liveConfig = CrawlConfig(
-    fetcher = Some(HttpFetcher("GraftBot/0.1", maxRedirects = 5)))
+    fetcher = Some(HttpFetcher(CrawlConfig().userAgent, maxRedirects = 5)))
 
   private def dump(df: org.apache.spark.sql.DataFrame) = df.toJSON.collect().sorted.toSeq
 
@@ -197,7 +205,7 @@ class HttpFetcherSpec extends AnyFunSuite {
         Reasons.robotsPathFiltered(CrawlConfig().userAgent))))
     }
     val robotsGets = seen.filter(_._1 == "/robots.txt")
-    assert(robotsGets === Seq(("/robots.txt", "GraftBot/0.1")),
-      "exactly one robots.txt GET, sent with the fetcher's User-Agent")
+    assert(robotsGets === Seq(("/robots.txt", CrawlConfig().userAgent)),
+      "exactly one robots.txt GET, sent with the agent its rules are judged for")
   }
 }

@@ -13,6 +13,10 @@ the parent's by more than the metric's bound, and `unresolved` where the
 parent's own spread (IQR / median) is wider than the bound. Everything it
 knows about metrics, directions and bounds comes from BENCHMARK.json.
 
+It flags `MORE FAILED` when the change's summed failed/attempted share is
+above the parent's. It exits 1 on any `WORSE`, on `MORE FAILED`, and when a
+pair was dropped because a run failed.
+
 Manifests store absolute paths, so `state_mb` moves with the checkout
 path's length; the script warns when the two paths differ in length.
 """
@@ -76,6 +80,13 @@ def report(bench, workload, pairs):
               (name, ma, qa[1] - qa[0], mb, qb[1] - qb[0], wins, len(ab), 100 * delta, flag))
     failed = [(p["failed"], c["failed"]) for p, c in pairs]
     print("failed ops (parent, change) per pair: %s" % failed)
+
+    def share(side):
+        attempted = sum(pair[side]["attempted"] for pair in pairs)
+        return sum(pair[side]["failed"] for pair in pairs) / attempted if attempted else 0.0
+    if share(1) > share(0):
+        print("failed/attempted parent %.6f change %.6f  MORE FAILED" % (share(0), share(1)))
+        worse.append("failed_frac")
     return worse
 
 
@@ -96,6 +107,7 @@ def main():
         bench = json.load(fh)
     out = open(args.out, "a") if args.out else None
     worse = []
+    dropped = 0
     for workload in args.workloads.split(","):
         pairs = []
         for i, seed in enumerate(parse_seeds(args.seeds)):
@@ -113,12 +125,16 @@ def main():
                 pairs.append((res["parent"], res["change"]))
             else:
                 print("pair %s seed %d dropped: a run failed" % (workload, seed))
+                dropped += 1
         if pairs:
             worse += ["%s.%s" % (workload, n) for n in report(bench, workload, pairs)]
     if out:
         out.close()
     if worse:
         print("worse beyond bound: " + ", ".join(worse))
+    if dropped:
+        print("%d pair(s) dropped because a run failed" % dropped)
+    if worse or dropped:
         sys.exit(1)
 
 
