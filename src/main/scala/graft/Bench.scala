@@ -319,7 +319,7 @@ object Bench {
       crawlBenchIsolated(cores, Hosts / shrink, Pages / shrink).map(cal.note)
     def politeLeg(cores: Int) = crawlBenchIsolated(cores, PoliteHosts, PolitePages,
       PoliteBudget, PoliteCycles, PoliteWaves).map(cal.note)
-    // every round is tagged with the min of probes before and after its legs
+    // every round is stamped with the min of probes before and after its legs
     def round(extra: Boolean)(legs: => (Option[CrawlRun], Option[CrawlRun], Option[CrawlRun])): Round = {
       val t0 = System.nanoTime()
       val before = HostWindow.probe(nLo, nHi)

@@ -392,7 +392,7 @@ final class CrawlEngine(
     hits.unionByName(misses)
   }
 
-  import CrawlEngine.WaveOut
+  import CrawlEngine.{BucketTally, WaveOut, WaveTally}
 
   /**
    * One drain → robots → fetch → parse → enqueue wave (SURVEY §3.4 steps
@@ -515,8 +515,8 @@ final class CrawlEngine(
     // FilterHttpError → AjaxLinksTransform. The chain is config-driven
     // (CrawlConfig.responseStages ≙ the reference's reflective stage list,
     // Pipeline.scala:39-46); the Downloader's own error channel (connection
-    // failures, Downloader.scala:44-48) is tagged before any stage runs, and
-    // robots.txt rows are tagged ROBOTS, so stages (which touch only rows
+    // failures, Downloader.scala:44-48) is marked before any stage runs, and
+    // robots.txt rows are marked ROBOTS, so stages (which touch only rows
     // whose outcome is null) pass them through.
     val preTagged = fetched
       .withColumns(Map(
@@ -673,88 +673,61 @@ final class CrawlEngine(
         $"depth", lit(cycle), config.defaultHeaders)
       .localCheckpoint(false)
 
-    // ---- per-bucket lineage / metrics in ONE action ---------------------
+    // ---- per-bucket tally in ONE aggregate ------------------------------
     // The reference's counters (Master.scala:46-47) are driver-side ints;
-    // ours are one unioned aggregate collected once per cycle — at scale,
-    // every extra .count() is a full job dispatch, so all remaining cycle
-    // statistics (per-bucket drain/enqueue lineage, deferral counters,
-    // touched-bucket set) ride a single collect over a few hundred rows.
-    def tagged(tag: String, df: DataFrame): DataFrame = df.select(
-      lit(tag).as("tag"),
-      (if (df.columns.contains("bucket")) $"bucket" else lit(-1)).as("bucket"),
-      (if (df.columns.contains("v1")) $"v1" else lit(0L)).cast("long").as("v1"),
-      (if (df.columns.contains("v2")) $"v2" else lit(0L)).cast("long").as("v2"),
-      (if (df.columns.contains("v3")) $"v3" else lit(0L)).cast("long").as("v3"),
-      (if (df.columns.contains("v4")) $"v4" else lit(0L)).cast("long").as("v4"),
-      (if (df.columns.contains("urls")) $"urls"
-       else typedlit(Seq.empty[String])).as("urls"))
-    // small waves ride the enqueued urls back on the stats collect (bounded
+    // ours are one aggregate collected once per wave. Every branch a
+    // statistic reads contributes narrow (bucket, kind, url) rows to one
+    // union, grouped once by bucket: a single shuffle stage, where one
+    // aggregate per branch cost one AQE stage (one Spark job) each. A page
+    // outcome's kind is the outcome itself (OK/ERROR/RETRY); the other kinds
+    // name the branch. Lineage, touched buckets, robots buckets and every
+    // wave total derive from the collected tallies (see WaveTally).
+    // Small waves ride the enqueued urls back on the same collect (bounded
     // by linksCount — ≤ ~5 MB) so the RECENT-sketch maintenance becomes
     // driver-side puts instead of a separate distributed sketch-build job;
     // big waves keep the distributed build (urls must not flood the driver)
     val collectUrls = linksCount <= 50000
-    val newAgg =
-      if (collectUrls) newRows.groupBy($"bucket")
-        .agg(count(lit(1)).as("v1"), collect_list($"url").as("urls"))
-      else newRows.groupBy($"bucket").agg(count(lit(1)).as("v1"))
-    val stats = tagged("out", outcomes.groupBy($"bucket").agg(
-        count(lit(1)).as("v1"),
-        sum(when($"outcome" === "OK", 1L).otherwise(0L)).as("v2"),
-        sum(when($"outcome" === "ERROR", 1L).otherwise(0L)).as("v3"),
-        sum(when($"outcome" === "RETRY", 1L).otherwise(0L)).as("v4")))
-      .unionByName(tagged("new", newAgg))
-      .unionByName(danglingDf.map(d => tagged("dangling", d.agg(count(lit(1)).as("v1"))))
-        .getOrElse(spark.emptyDataFrame.select(lit("dangling").as("tag"),
-          lit(-1).as("bucket"), lit(0L).as("v1"), lit(0L).as("v2"),
-          lit(0L).as("v3"), lit(0L).as("v4"),
-          typedlit(Seq.empty[String]).as("urls")).limit(0)))
-      .unionByName(tagged("robdef", robotsUnknown.agg(count(lit(1)).as("v1"))))
-      // robnew per BUCKET: the bucket set drives the robots COW commit
-      .unionByName(tagged("robnew",
-        robotsNew.groupBy($"bucket").agg(count(lit(1)).as("v1"))))
-      .unionByName(tagged("drainable", drainable.agg(count(lit(1)).as("v1"))))
-    val statsRows = stats.collect()
-
-    def one(tag: String): Long = statsRows.collectFirst {
-      case r if r.getString(0) == tag => r.getLong(2) }.getOrElse(0L)
-    val outStats = statsRows.filter(_.getString(0) == "out")
-    val newStats = statsRows.filter(_.getString(0) == "new")
-    val robnewStats = statsRows.filter(_.getString(0) == "robnew")
-    val drainedCount = outStats.map(_.getLong(2)).sum
-    val enqueuedCount = newStats.map(_.getLong(2)).sum
-    val dedupCount = linksCount - enqueuedCount
-    val deferredRobots = one("robdef")
-    val robotsFetched = robnewStats.map(_.getLong(2)).sum
-    // polite = allowed + denied + robots-deferred, and outcomes holds exactly
-    // the allowed and denied pages (robots.txt rows excluded), so its count
-    // derives from branches already collected:
-    // polite = |outcomes| + |robotsUnknown| — one fewer stats branch per cycle
-    val deferredPolite = one("drainable") - (drainedCount + one("robdef"))
-    seenCountEstimate += enqueuedCount
-
-    val touched = (outStats.map(_.getInt(1)) ++ newStats.map(_.getInt(1))).toSet
+    val noUrl = lit(null).cast("string")
+    def kind(df: DataFrame, k: Column, url: Column = noUrl): DataFrame =
+      df.select($"bucket", k.as("kind"), url.as("url"))
+    val branches = Seq(
+      kind(outcomes, $"outcome"),
+      kind(newRows, lit("NEW"), if (collectUrls) $"url" else noUrl),
+      kind(robotsNew, lit("ROBOTS")),
+      kind(robotsUnknown, lit("DEFER_ROBOTS")),
+      kind(drainable, lit("DRAINABLE"))) ++
+      danglingDf.map(d => kind(d.withColumn("bucket", lit(-1)), lit("DANGLING")))
+    def tally(k: String) = count_if($"kind" === k)
+    val tallies = branches.reduce(_ unionByName _)
+      .groupBy($"bucket")
+      .agg(count_if(!$"kind".isin("NEW", "ROBOTS", "DEFER_ROBOTS", "DRAINABLE",
+          "DANGLING")).as("drained"),
+        tally("OK").as("ok"), tally("ERROR").as("errors"), tally("RETRY").as("retried"),
+        tally("NEW").as("enqueued"), tally("ROBOTS").as("robots"),
+        tally("DEFER_ROBOTS").as("deferredRobots"), tally("DANGLING").as("dangling"),
+        tally("DRAINABLE").as("drainable"), collect_list($"url").as("urls"))
+      .as[BucketTally].collect().sortBy(_.bucket).toSeq
+    val wave = WaveTally(cycle, linksCount, tallies)
+    seenCountEstimate += wave.enqueued
 
     // URL-seen maintenance: fold this cycle's enqueued urls into RECENT.
     // The merge sketch is sized to the recent window (recentItems), never to
     // the full frontier — per-cycle cost is O(enqueued) puts plus a
     // recent-sized allocation; the multi-GB main sketch is untouched until
     // its amortized doubling rebuild.
-    if (enqueuedCount > 0) {
-      if (collectUrls)
-        statsRows.withFilter(_.getString(0) == "new")
-          .foreach(_.getSeq[String](6).foreach(recent.put))
+    if (wave.enqueued > 0) {
+      if (collectUrls) tallies.foreach(_.urls.foreach(recent.put))
       else recent.mergeIn(SeenSketch.build(newRows, "url", recentItems, 0.01))
-      recentCount += enqueuedCount
+      recentCount += wave.enqueued
       rebroadcastRecent()
     }
 
     // ---- 9. NEXT FRONTIER: status updates restricted to touched buckets -
     // The status-update join runs over ONLY the buckets drained or enqueued
-    // this wave (drained rows' buckets are by construction inside
-    // `touched`), so per-wave cost scales with the batch, not with a
-    // 10^10-row frontier; untouched buckets pass through as an untouched
-    // cached subtree and, at commit time, carry forward in the manifest
-    // without being read or rewritten.
+    // this wave (the tally's touched set), so per-wave cost scales with the
+    // batch, not with a 10^10-row frontier; untouched buckets pass through
+    // as an untouched cached subtree and, at commit time, carry forward in
+    // the manifest without being read or rewritten.
     val updates = outcomes.select($"url",
       when($"outcome" === "OK", Status.Completed)
         .when($"outcome" === "ERROR", Status.WithError)
@@ -763,7 +736,7 @@ final class CrawlEngine(
       $"reason".as("u_reason"),
       lit(cycle).as("u_started"))
     val frontierNext = frontier
-      .filter(if (touched.isEmpty) lit(false) else $"bucket".isin(touched.toSeq: _*))
+      .filter(if (wave.touched.isEmpty) lit(false) else $"bucket".isin(wave.touched.toSeq: _*))
       .join(updates.hint("shuffle_hash"), Seq("url"), "left")
       .select($"url", $"host", $"bucket", $"depth", $"prio",
         coalesce($"u_status", $"status").as("status"),
@@ -773,39 +746,12 @@ final class CrawlEngine(
         $"headers")
       .unionByName(newRows.select($"url", $"host", $"bucket", $"depth",
         $"prio", $"status", $"started", $"retries", $"reason", $"headers"))
-    val enqByBucket = newStats.map(r => r.getInt(1) -> r.getLong(2)).toMap
-    val lineageRows: Seq[LineageRow] = {
-      val outBuckets = outStats.map { r =>
-        LineageRow(cycle, r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(3),
-          r.getLong(4), r.getLong(5), enqByBucket.getOrElse(r.getInt(1), 0L),
-          dedupCount, deferredRobots, deferredPolite, 0L)
-      }
-      val onlyNew = (enqByBucket.keySet -- outStats.map(_.getInt(1)).toSet).toSeq
-        .map(b => LineageRow(cycle, b, 0L, 0L, 0L, 0L, 0L, enqByBucket(b),
-          dedupCount, deferredRobots, deferredPolite, 0L))
-      outBuckets.toSeq ++ onlyNew
-    }
-    // O9 from this wave's stats: work remains iff something was enqueued,
-    // deferred (robots/politeness) or re-enqueued for retry — saves the
-    // final empty confirmation cycle (and its full plan/codegen cost)
-    val retriedCount = outStats.map(_.getLong(5)).sum
-    val pending = enqueuedCount + deferredRobots + deferredPolite + retriedCount
-    expectedBatch = pending
+    expectedBatch = wave.pending
     WaveOut(
       frontierNext = frontierNext,
-      robotsOut = if (robotsFetched == 0) robots else robotsOut,
-      outRows = if (drainedCount > 0) Some(outRows) else None,
-      lineageRows = lineageRows,
-      touched = touched,
-      robotsChanged = robnewStats.map(_.getInt(1)).toSet,
-      drained = drainedCount,
-      robotsFetched = robotsFetched,
-      enqueued = enqueuedCount,
-      deduped = dedupCount,
-      deferredRobots = deferredRobots,
-      deferredPolite = deferredPolite,
-      dangling = one("dangling"),
-      pending = pending)
+      robotsOut = if (wave.robotsFetched == 0) robots else robotsOut,
+      outRows = if (wave.drained > 0) Some(outRows) else None,
+      tally = wave)
   }
 
   /**
@@ -875,8 +821,8 @@ final class CrawlEngine(
     // (the cow write filters to the group's touched buckets itself)
     def fullNext(w: WaveOut): DataFrame = {
       val untouched =
-        if (w.touched.isEmpty) frontier
-        else frontier.filter(!$"bucket".isin(w.touched.toSeq: _*))
+        if (w.tally.touched.isEmpty) frontier
+        else frontier.filter(!$"bucket".isin(w.tally.touched.toSeq: _*))
       untouched.unionByName(w.frontierNext)
     }
     // inputs of the PREVIOUS wave: releasable once the current wave's jobs
@@ -892,7 +838,7 @@ final class CrawlEngine(
         frontier, robots, startCycle + waves)
       outs = outs :+ w
       waves += 1
-      if (w.drained + w.robotsFetched == 0 || w.pending == 0 ||
+      if (w.tally.drained + w.tally.robotsFetched == 0 || w.tally.pending == 0 ||
         waves >= maxWaves) stop = true
       else {
         // chain into the next wave through a LOCAL CHECKPOINT, not a bare
@@ -916,19 +862,20 @@ final class CrawlEngine(
 
     // per-bucket cumulative row estimates feed hot-host detection (the
     // lineage rows already carry per-bucket enqueue counts — no extra job)
-    outs.foreach(_.lineageRows.foreach(lr =>
-      bucketRowEst(lr.bucket) = bucketRowEst.getOrElse(lr.bucket, 0L) + lr.enqueued))
+    val lineageRows = outs.flatMap(_.tally.lineageRows)
+    lineageRows.foreach(lr =>
+      bucketRowEst(lr.bucket) = bucketRowEst.getOrElse(lr.bucket, 0L) + lr.enqueued)
     val (frontierCommit, promoted, hotTable) = promoteHotHosts(fullNext(last))
 
-    val touchedAll = outs.iterator.flatMap(_.touched).toSet ++ promoted
+    val touchedAll = outs.iterator.flatMap(_.tally.touched).toSet ++ promoted
     // robots is COW-committed by hostBucket exactly like the frontier: a
     // robots-fetching group rewrites only the buckets that gained hosts,
     // not the whole table
-    val robotsChangedAll = outs.iterator.flatMap(_.robotsChanged).toSet
+    val robotsChangedAll = outs.iterator.flatMap(_.tally.robotsChanged).toSet
     // waves with drained == 0 have structurally empty output; skipping them
     // avoids a full images-table scan against an empty batch
     val outAppend = outs.flatMap(_.outRows).reduceOption(_ unionByName _)
-    val lineage = spark.createDataset(outs.flatMap(_.lineageRows)).toDF()
+    val lineage = spark.createDataset(lineageRows).toDF()
 
     val s = snap.commit(endCycle,
       fullTables = hotTable.map(t => Map("hothosts" -> t)).getOrElse(Map.empty),
@@ -944,18 +891,18 @@ final class CrawlEngine(
         "num_buckets" -> config.numBuckets.toDouble,
         "hot_hosts" -> hotHosts.size.toDouble,
         "hot_host_salts" -> config.hotHostSalts.toDouble,
-        "drained" -> outs.map(_.drained).sum.toDouble,
-        "enqueued" -> outs.map(_.enqueued).sum.toDouble,
-        "deduped" -> outs.map(_.deduped).sum.toDouble,
-        "robots_fetched" -> outs.map(_.robotsFetched).sum.toDouble,
-        "deferred_robots" -> last.deferredRobots.toDouble,
-        "dangling_images" -> outs.map(_.dangling).sum.toDouble))
+        "drained" -> outs.map(_.tally.drained).sum.toDouble,
+        "enqueued" -> outs.map(_.tally.enqueued).sum.toDouble,
+        "deduped" -> outs.map(_.tally.deduped).sum.toDouble,
+        "robots_fetched" -> outs.map(_.tally.robotsFetched).sum.toDouble,
+        "deferred_robots" -> last.tally.deferredRobots.toDouble,
+        "dangling_images" -> outs.map(_.tally.dangling).sum.toDouble))
     hotLoadedVersion = s.version // hotHosts is current for this snapshot
 
     releasable.foreach(_.unpersist())
     frontier.unpersist()
     robots.unpersist()
-    (s, last.drained + last.robotsFetched, last.pending, waves)
+    (s, last.tally.drained + last.tally.robotsFetched, last.tally.pending, waves)
   }
 
   /** Drive cycles until Finished (O9/O10); returns final snapshot. */
@@ -1023,20 +970,46 @@ final class CrawlEngine(
 }
 
 object CrawlEngine {
+  /** One bucket's share of a wave: its page outcomes (drained, of which ok,
+    * errors and retried), the new frontier rows it gained, its robots.txt
+    * responses, its robots-deferred and drainable frontier rows, dangling
+    * image refs (bucket -1) and, on small waves, the enqueued urls.
+    * Package-private, not private: Spark's generated deserializer must be
+    * able to call its constructor. */
+  private[driver] final case class BucketTally(bucket: Int, drained: Long, ok: Long,
+      errors: Long, retried: Long, enqueued: Long, robots: Long,
+      deferredRobots: Long, dangling: Long, drainable: Long, urls: Seq[String])
+
+  /** A wave's collected tallies and everything derived from them. */
+  private final case class WaveTally(cycle: Long, links: Long, buckets: Seq[BucketTally]) {
+    private def total(f: BucketTally => Long): Long = buckets.iterator.map(f).sum
+    val drained: Long = total(_.drained)
+    val enqueued: Long = total(_.enqueued)
+    val deduped: Long = links - enqueued
+    val robotsFetched: Long = total(_.robots)
+    val deferredRobots: Long = total(_.deferredRobots)
+    // polite = allowed + denied + robots-deferred, and the outcomes hold
+    // exactly the allowed and denied pages (robots.txt rows excluded)
+    val deferredPolite: Long = total(_.drainable) - drained - deferredRobots
+    val dangling: Long = total(_.dangling)
+    // O9: work remains iff something was enqueued, deferred (robots or
+    // politeness) or re-enqueued for retry — saves the final empty
+    // confirmation cycle (and its full plan/codegen cost)
+    val pending: Long = enqueued + deferredRobots + deferredPolite + total(_.retried)
+    private val active = buckets.filter(t => t.drained > 0 || t.enqueued > 0)
+    /** buckets drained or enqueued this wave: the frontier dirs it rewrites */
+    val touched: Set[Int] = active.map(_.bucket).toSet
+    /** buckets whose hosts gained robots rules: the robots dirs it rewrites */
+    val robotsChanged: Set[Int] = buckets.filter(_.robots > 0).map(_.bucket).toSet
+    def lineageRows: Seq[LineageRow] = active.map(t => LineageRow(cycle, t.bucket,
+      t.drained, t.ok, t.ok, t.errors, t.retried, t.enqueued, deduped,
+      deferredRobots, deferredPolite, 0L))
+  }
+
   /** Everything one wave hands the group commit (see runGroup). */
   private final case class WaveOut(
       frontierNext: DataFrame, // replacement rows for the touched buckets
       robotsOut: DataFrame, // full next robots (same reference when nothing was fetched)
       outRows: Option[DataFrame], // this wave's output append (None when drained == 0)
-      lineageRows: Seq[LineageRow],
-      touched: Set[Int],
-      robotsChanged: Set[Int], // robnew buckets
-      drained: Long,
-      robotsFetched: Long,
-      enqueued: Long,
-      deduped: Long,
-      deferredRobots: Long,
-      deferredPolite: Long,
-      dangling: Long,
-      pending: Long)
+      tally: WaveTally)
 }

@@ -5,7 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.model.Reasons
+import graft.model.{CrawlConfig, Reasons}
 import graft.urls.CUrl
 
 /**
@@ -16,15 +16,15 @@ import graft.urls.CUrl
  * src/main/scala/es/udc/scrawl/Downloader.scala:30-49, asserted by
  * DownloaderTest.scala:20-98):
  *
- *  - GET with the row's request headers, plus the configured User-Agent
- *    unless a header named User-Agent (any case) is already among them →
- *    status/content-type/body passthrough;
+ *  - GET with the row's request headers, plus the crawl's User-Agent
+ *    (`CrawlConfig.userAgent`) unless a header named User-Agent (any case)
+ *    is already among them → status/content-type/body passthrough;
  *  - connection-level failure → `f_err = ConnectionError` (the reference's
  *    Error(task, reason) channel, Downloader.scala:44-48);
  *  - redirects followed HERE, not by the client (Redirect.NEVER): the
- *    engine's S4 contract — ≤ `maxRedirects` hops tracked in `hops`, the
- *    row keeps its ORIGINAL url (spray's host connector follows ≤5
- *    transparently, reference.conf:33), more ⇒ `f_err =
+ *    engine's S4 contract — ≤ `CrawlConfig.maxRedirects` hops tracked in
+ *    `hops`, the row keeps its ORIGINAL url (spray's host connector follows
+ *    ≤5 transparently, reference.conf:33), more ⇒ `f_err =
  *    MaxRedirectsReached` — matching prepareCorpus' offline resolution
  *    byte for byte.
  *
@@ -67,9 +67,13 @@ object HttpFetcher {
   private val RestrictedHeaders =
     Set("host", "connection", "content-length", "upgrade")
 
-  def apply(userAgent: String, maxRedirects: Int = 5,
-      connectTimeoutMs: Int = 5000, requestTimeoutMs: Int = 10000)
-      : DataFrame => DataFrame = claimed => {
+  /** The fetcher serving `config`: it sends `config.userAgent`, the agent
+    * the engine judges robots.txt rules for, and follows at most
+    * `config.maxRedirects` hops, the corpus' offline limit. */
+  def apply(config: CrawlConfig, connectTimeoutMs: Int = 5000,
+      requestTimeoutMs: Int = 10000): DataFrame => DataFrame = claimed => {
+    val userAgent = config.userAgent // the closure below ships these two, not the config
+    val maxRedirects = config.maxRedirects
     val spark = claimed.sparkSession
     import spark.implicits._
     claimed

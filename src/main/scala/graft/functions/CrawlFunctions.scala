@@ -23,9 +23,6 @@ object CrawlFunctions {
   val hostOfUdf = udf((s: String) =>
     Option(s).flatMap(CUrl.parseAbsolute).map(_.authority).orNull)
 
-  val pathOfUdf = udf((s: String) =>
-    Option(s).flatMap(CUrl.parseAbsolute).map(_.path).orNull)
-
   /** X1: extract + resolve + filter links (LinkExtractor.scala:19-44). */
   val extractLinksUdf = udf((body: String, base: String, ct: String) =>
     if (body == null || base == null) Seq.empty[String]

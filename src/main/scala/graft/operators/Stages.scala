@@ -28,7 +28,7 @@ import graft.functions.CrawlFunctions.ajaxRewriteUdf
  * preserving upstream stages' verdicts — exactly the first-stage-wins
  * traversal order of the actor chain). After the fold the engine coalesces
  * the remaining NULLs to OK. The batch also carries the wave's robots.txt
- * responses (`depth = -1`), tagged `outcome = "ROBOTS"` before the fold:
+ * responses (`depth = -1`), marked `outcome = "ROBOTS"` before the fold:
  * stages that touch only passing rows leave them unchanged, and the engine
  * turns them into robots rules, never into outcomes or links.
  *

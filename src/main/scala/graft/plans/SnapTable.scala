@@ -1,5 +1,6 @@
 package graft.plans
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
@@ -75,7 +76,7 @@ private[plans] object Manifests {
   def read(rootPath: Path, version: Long): Snapshot = {
     implicit val fmt: Formats = DefaultFormats
     val js = JsonMethods.parse(new String(
-      Files.readAllBytes(rootPath.resolve(s"snapshots/v$version.json"))))
+      Files.readAllBytes(rootPath.resolve(s"snapshots/v$version.json")), UTF_8))
     Snapshot(
       (js \ "version").extract[Long],
       (js \ "cycle").extract[Long],
@@ -85,31 +86,22 @@ private[plans] object Manifests {
       (js \ "metrics").extract[Map[String, Double]])
   }
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def write(rootPath: Path, s: Snapshot): Unit = {
-    val tablesJson = s.tables.map { case (t, bs) =>
-      jstr(t) + ":{" + bs.toSeq.sortBy(_._1).map { case (b, p) =>
-        jstr(b.toString) + ":" + jstr(p)
-      }.mkString(",") + "}"
-    }.mkString("{", ",", "}")
-    val appendedJson = s.appended.map { case (t, dirs) =>
-      jstr(t) + ":[" + dirs.map(jstr).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val metricsJson = s.metrics.map { case (k, v) =>
-      jstr(k) + ":" + (if (v.isNaN || v.isInfinite) "0" else v.toString)
-    }.mkString("{", ",", "}")
-    val json =
-      s"""{"version":${s.version},"cycle":${s.cycle},"parent":${s.version - 1},
-         |"tables":$tablesJson,"appended":$appendedJson,"metrics":$metricsJson}""".stripMargin
+    // NaN and ±Inf have no JSON form: such a metric is written as 0
+    def metric(v: Double): JValue = JDouble(if (v.isNaN || v.isInfinite) 0 else v)
+    val json = JObject(
+      "version" -> JLong(s.version),
+      "cycle" -> JLong(s.cycle),
+      "parent" -> JLong(s.version - 1),
+      "tables" -> JObject(s.tables.toList.map { case (t, bs) =>
+        t -> JObject(bs.toList.sortBy(_._1).map { case (b, p) => b.toString -> JString(p) })
+      }),
+      "appended" -> JObject(s.appended.toList.map { case (t, dirs) =>
+        t -> JArray(dirs.map(JString(_)))
+      }),
+      "metrics" -> JObject(s.metrics.toList.map { case (k, v) => k -> metric(v) }))
     val mf = rootPath.resolve(s"snapshots/v${s.version}.json")
-    Files.write(mf, json.getBytes)
+    Files.write(mf, JsonMethods.compact(json).getBytes(UTF_8))
     val tmp = rootPath.resolve("LATEST.tmp")
     Files.write(tmp, s.version.toString.getBytes)
     Files.move(tmp, rootPath.resolve("LATEST"),

@@ -634,4 +634,71 @@ class EngineParitySpec extends AnyFunSuite {
     assert(visited === Set("http://host0.test/", "http://host0.test/resource",
       "http://host0.test/stuff"))
   }
+
+  test("wave bookkeeping: lineage rows and snapshot metrics pinned as goldens") {
+    // one crawl that hits every tallied kind: robots deferral (each seed
+    // host's first wave, and abs.test found mid-crawl), politeness deferral
+    // (hf.test links 3 pages at budget 2), a 404 retry, a 403 error, a
+    // robots denial, dedup (the diamond's child within a wave, bb.test/loop
+    // linking back to a seen seed) and a dangling image (site3's /stuff
+    // image is withheld)
+    val pages = Fixtures.robotsBasic ++ Fixtures.httpRetry ++ Fixtures.httpFilter ++
+      Fixtures.dedupDiamond ++ Fixtures.site3 ++ Fixtures.loopback ++ Fixtures.extractor
+    val seeds = Fixtures.robotsBasicSeeds ++ Fixtures.httpRetrySeeds ++
+      Fixtures.httpFilterSeeds ++ Fixtures.dedupDiamondSeeds ++ Fixtures.site3Seeds ++
+      Fixtures.loopbackSeeds ++ Fixtures.extractorSeeds
+    val images = Fixtures.imagesFor(pages).filter(_.image_id != "img-site3-stuff")
+    def crawl(waves: Int): (Seq[String], Seq[String]) = {
+      val dir = Files.createTempDirectory("graft-pin").toString
+      val engine = new CrawlEngine(spark,
+        CrawlConfig(maxDepth = 10, hostBudget = 2, wavesPerCommit = waves),
+        spark.createDataset(pages).toDF(), spark.createDataset(images).toDF(), dir)
+      engine.run(seeds)
+      val lineage = engine.lineageNow.as[LineageRow].collect()
+        .sortBy(r => (r.cycle, r.bucket)).map(_.productIterator.mkString(",")).toSeq
+      val metrics = (0L to engine.snap.latestVersion.get).map { v =>
+        s"v$v " + engine.snap.readSnapshot(v).metrics.toSeq.sorted
+          .map { case (k, x) => s"$k=$x" }.mkString(" ")
+      }
+      (lineage, metrics)
+    }
+    // literal goldens: a change to how a wave counts must reproduce them.
+    // A LineageRow is (cycle, bucket, drained, fetched, completed, errors,
+    // retried, enqueued, deduped, deferred_robots, deferred_polite,
+    // output_rows), and grouping waves into commits leaves it unchanged
+    val lineageGolden = Seq(
+      "2,8,1,1,1,0,0,3,0,0,0,0",
+      "2,11,1,1,1,0,0,2,0,0,0,0",
+      "2,15,1,1,1,0,0,2,0,0,0,0",
+      "2,22,1,1,1,0,0,3,0,0,0,0",
+      "2,23,1,1,1,0,0,2,0,0,0,0",
+      "2,24,1,1,1,0,0,2,0,0,0,0",
+      "2,27,1,1,1,0,0,2,0,0,0,0",
+      "3,8,2,2,2,0,0,0,1,1,2,0",
+      "3,11,2,1,1,0,1,0,1,1,2,0",
+      "3,15,2,1,1,1,0,0,1,1,2,0",
+      "3,22,2,1,1,1,0,0,1,1,2,0",
+      "3,23,2,2,2,0,0,0,1,1,2,0",
+      "3,24,2,2,2,0,0,1,1,1,2,0",
+      "3,27,1,1,1,0,0,0,1,1,2,0",
+      "4,8,1,1,1,0,0,0,0,0,0,0",
+      "4,11,1,0,0,1,0,0,0,0,0,0",
+      "4,22,1,0,0,1,0,0,0,0,0,0",
+      "4,24,1,1,1,0,0,0,0,0,0,0",
+      "4,27,1,1,1,0,0,0,0,0,0,0")
+    val (lineage1, metrics1) = crawl(1)
+    assert(lineage1 === lineageGolden)
+    assert(metrics1 === Seq(
+      "v0 num_buckets=32.0 seeded=7.0",
+      "v1 cycle=1.0 dangling_images=0.0 deduped=0.0 deferred_robots=7.0 drained=0.0 enqueued=0.0 hot_host_salts=8.0 hot_hosts=0.0 num_buckets=32.0 robots_fetched=7.0 waves=1.0",
+      "v2 cycle=2.0 dangling_images=0.0 deduped=0.0 deferred_robots=0.0 drained=7.0 enqueued=16.0 hot_host_salts=8.0 hot_hosts=0.0 num_buckets=32.0 robots_fetched=0.0 waves=1.0",
+      "v3 cycle=3.0 dangling_images=1.0 deduped=1.0 deferred_robots=1.0 drained=13.0 enqueued=1.0 hot_host_salts=8.0 hot_hosts=0.0 num_buckets=32.0 robots_fetched=1.0 waves=1.0",
+      "v4 cycle=4.0 dangling_images=0.0 deduped=0.0 deferred_robots=0.0 drained=5.0 enqueued=0.0 hot_host_salts=8.0 hot_hosts=0.0 num_buckets=32.0 robots_fetched=0.0 waves=1.0"))
+    val (lineage2, metrics2) = crawl(2)
+    assert(lineage2 === lineageGolden)
+    assert(metrics2 === Seq(
+      "v0 num_buckets=32.0 seeded=7.0",
+      "v1 cycle=2.0 dangling_images=0.0 deduped=0.0 deferred_robots=0.0 drained=7.0 enqueued=16.0 hot_host_salts=8.0 hot_hosts=0.0 num_buckets=32.0 robots_fetched=7.0 waves=2.0",
+      "v2 cycle=4.0 dangling_images=1.0 deduped=1.0 deferred_robots=0.0 drained=18.0 enqueued=1.0 hot_host_salts=8.0 hot_hosts=0.0 num_buckets=32.0 robots_fetched=1.0 waves=2.0"))
+  }
 }

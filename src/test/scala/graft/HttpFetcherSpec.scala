@@ -164,8 +164,10 @@ class HttpFetcherSpec extends AnyFunSuite {
     engine
   }
 
-  private val liveConfig = CrawlConfig(
-    fetcher = Some(HttpFetcher(CrawlConfig().userAgent, maxRedirects = 5)))
+  /** `c` fetching over HTTP with the agent and redirect limit it names. */
+  private def live(c: CrawlConfig) = c.copy(fetcher = Some(HttpFetcher(c)))
+
+  private val liveConfig = live(CrawlConfig())
 
   private def dump(df: org.apache.spark.sql.DataFrame) = df.toJSON.collect().sorted.toSeq
 
@@ -207,5 +209,23 @@ class HttpFetcherSpec extends AnyFunSuite {
     val robotsGets = seen.filter(_._1 == "/robots.txt")
     assert(robotsGets === Seq(("/robots.txt", CrawlConfig().userAgent)),
       "exactly one robots.txt GET, sent with the agent its rules are judged for")
+  }
+
+  test("live crawl asks for robots.txt as the agent its rules are judged for") {
+    // the catch-all group allows everything; only the group named for the
+    // configured agent (matched by its name before the '/') disallows /stuff
+    val robots = "User-agent: *\nDisallow:\n\nUser-agent: testbot\nDisallow: /stuff\n"
+    val agent = "TestBot/2.0"
+    val seen = withServer(port => routesOf(port, sitePages(base(port))) +
+        ("/robots.txt" -> ((200, Map("Content-Type" -> "text/plain"), robots)))) { port =>
+      val engine = crawl(port, sitePages(base(port)), Nil, live(CrawlConfig(userAgent = agent)))
+      val status = engine.frontierNow.select("url", "status", "reason").collect()
+        .map(r => r.getString(0).stripPrefix(base(port)) -> ((r.getString(1), r.getString(2))))
+        .toMap
+      assert(status("/stuff") === ((Status.WithError, Reasons.robotsPathFiltered(agent))))
+      assert(status("/resource") === ((Status.Completed, null)))
+    }
+    assert(seen.filter(_._1 == "/robots.txt") === Seq(("/robots.txt", agent)))
+    assert(seen.forall(_._2 == agent), s"a request went out as another agent: $seen")
   }
 }

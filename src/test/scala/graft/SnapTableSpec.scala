@@ -42,4 +42,14 @@ class SnapTableSpec extends AnyFunSuite {
     assert(store.readTable(next, "frontier").get.count() === 2)
     assert(store.readAppended(next, "lineage").get.count() === 1)
   }
+
+  test("a manifest round-trips a table name with a quote, backslash and control char; NaN is written as 0") {
+    val root = Files.createTempDirectory("graft-manifest").toString
+    val store = new SnapTable(spark, root)
+    val odd = "we\"ird\\name\u0001"
+    val snap = store.commit(0L, appends = Map(odd -> spark.range(2).toDF("x")),
+      metrics = Map("rate" -> Double.NaN, "rows" -> 2.0, odd -> 1.5))
+    val back = new SnapTable(spark, root).readSnapshot(snap.version)
+    assert(back === snap.copy(metrics = snap.metrics + ("rate" -> 0.0)))
+  }
 }
