@@ -275,6 +275,50 @@ object Bench {
     case _ => bench()
   }
 
+  /** A round to run: a politeness or a crawl round, a base round or a retry. */
+  private[graft] final case class Next(polite: Boolean, extra: Boolean)
+
+  /** Where the schedule stands: the wall used and allowed, the rounds so far,
+    * and the clean weak (crawl) and strong (politeness) pairs they hold. */
+  private[graft] final case class Progress(elapsed: Double, maxWall: Double,
+      crawl: Seq[Round], polite: Seq[Round], weakClean: Int, politeClean: Int)
+
+  /**
+   * The bench's next round, if any, and whether the wall budget turned a
+   * wanted round down. Order: base trial rounds → base politeness rounds →
+   * slim weak retries → politeness retries. A round starts only when the
+   * wall left covers 1.2x its estimated cost: the largest same-kind round so
+   * far, 0.8x a trial round for a slim retry (it skips the lo leg), 2x a
+   * trial round for a first politeness round (300 s stands in for a trial
+   * round before one ran). Base round 1 always runs: an artifact with one
+   * round beats none. Slim retries run only after a politeness round and
+   * before any politeness retry: a retry is estimated cheaper than a first
+   * politeness round, so a tight wall would otherwise go to retries and
+   * publish no `polite` block.
+   */
+  private[graft] def nextRound(p: Progress): (Option[Next], Boolean) = {
+    var declined = false
+    def fits(estSecs: Double): Boolean = {
+      val ok = p.maxWall - p.elapsed > estSecs * 1.2
+      declined ||= !ok
+      ok
+    }
+    val trialWall = p.crawl.map(_.wall).maxOption.getOrElse(300.0)
+    val politeEst = p.polite.map(_.wall).maxOption.getOrElse(2.0 * trialWall)
+    val next =
+      if (p.crawl.size < Trials && (p.crawl.isEmpty || fits(trialWall))) Some(Next(false, false))
+      else if (p.polite.size < PoliteTrials && fits(politeEst)) Some(Next(true, false))
+      else if (p.polite.nonEmpty && !p.polite.exists(_.extra) &&
+        p.weakClean < HostWindow.TargetCleanPairs &&
+        p.crawl.count(_.extra) < HostWindow.MaxExtraTrials && fits(0.8 * trialWall))
+        Some(Next(false, true))
+      else if (p.polite.nonEmpty && p.politeClean < HostWindow.MinCleanPairs &&
+        p.polite.count(_.extra) < HostWindow.MaxExtraPolite && fits(politeEst))
+        Some(Next(true, true))
+      else None
+    (next, declined)
+  }
+
   private def bench(): Unit = {
     val benchT0 = System.nanoTime()
     def elapsedSecs: Double = (System.nanoTime() - benchT0) / 1e9
@@ -338,33 +382,20 @@ object Bench {
       polite :+= round(extra)((politeLeg(nLo), politeLeg(nHi), None))
       emit()
     }
-    // a round only starts when the remaining budget covers 1.2x its
-    // estimated cost (the largest same-kind round so far)
-    def wallAllows(estSecs: Double): Boolean = {
-      val ok = maxWallSecs - elapsedSecs > estSecs * 1.2
-      if (!ok) exhausted = true
-      ok
-    }
+    def progress = Progress(elapsedSecs, maxWallSecs, crawl, polite,
+      cleanCount(HostWindow.weakPairs(crawl)), cleanCount(HostWindow.strongPairs(polite)))
     def cleanCount(ps: Seq[HostWindow.Pair]): Int = new HostWindow.Rules(cal.all).cleanPairs(ps).size
-    def crawlWall = crawl.map(_.wall).maxOption
-    if (!skipCrawl) {
-      // schedule: base trial rounds → base politeness rounds → slim weak
-      // retries → politeness retries, every step gated by the wall budget
-      // (base round 1 always runs — an artifact with one round beats none)
-      while (crawl.size < Trials && (crawl.isEmpty || wallAllows(crawlWall.getOrElse(0.0))))
-        crawlRound(extra = false)
-      // first politeness round's cost is unknown → estimate 2x a trial round
-      def politeEst: Double =
-        polite.map(_.wall).maxOption.getOrElse(2.0 * crawlWall.getOrElse(300.0))
-      while (polite.size < PoliteTrials && wallAllows(politeEst)) politeRound(extra = false)
-      while (cleanCount(HostWindow.weakPairs(crawl)) < HostWindow.TargetCleanPairs &&
-        crawl.count(_.extra) < HostWindow.MaxExtraTrials &&
-        wallAllows(0.8 * crawlWall.getOrElse(300.0))) // slim rounds skip the lo leg
-        crawlRound(extra = true)
-      while (polite.nonEmpty && cleanCount(HostWindow.strongPairs(polite)) < HostWindow.MinCleanPairs &&
-        polite.count(_.extra) < HostWindow.MaxExtraPolite && wallAllows(politeEst))
-        politeRound(extra = true)
+    @annotation.tailrec def schedule(): Unit = {
+      val (next, declined) = nextRound(progress)
+      exhausted ||= declined
+      next match {
+        case Some(Next(isPolite, extra)) =>
+          if (isPolite) politeRound(extra) else crawlRound(extra)
+          schedule()
+        case None =>
+      }
     }
+    if (!skipCrawl) schedule()
     emit()
     println(JsonMethods.compact(compose()))
   }

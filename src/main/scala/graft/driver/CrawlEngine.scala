@@ -45,6 +45,7 @@ final class CrawlEngine(
     store: SnapshotStore = null) {
 
   import spark.implicits._
+  SnapTable.requireGlobFree(workDir, "workDir") // the resolved corpus is read under it
 
   /** Durable-table layer: the bundled manifest store by default; inject an
     * Iceberg-backed [[SnapshotStore]] here to run on a real catalog. */
@@ -121,11 +122,13 @@ final class CrawlEngine(
 
   /**
    * Pre-resolve redirect chains once per run (S4): spray's host connector
-   * follows ≤5 redirects transparently (reference.conf:33), keeping the
-   * task's original URL. maxRedirects joins at setup time buys a single
-   * equi-join per cycle at fetch time. robots.txt files are ordinary corpus
-   * rows: a wave's robots.txt requests ride its claimed batch through the
-   * same fetch as its pages, so no robots table is derived here.
+   * follows ≤ maxRedirects redirects transparently (reference.conf:33),
+   * keeping the task's original URL, so a cycle's fetch is one equi-join.
+   * Chains are chased over the narrow (url, status, redirect_to) edges of the
+   * redirecting pages, one left join per hop; then each source takes its
+   * final target's content in one join built on the small chased map, so the
+   * wide corpus is scanned twice at any maxRedirects and never shuffles.
+   * robots.txt files are ordinary corpus rows, fetched like pages.
    */
   def prepareCorpus(): Unit = {
     // materialize the images table once: the input may be a *generated*
@@ -138,32 +141,28 @@ final class CrawlEngine(
     // Iceberg bucket(url) layout): no redirect pre-resolution pass here
     if (config.bucketedCorpusTable.nonEmpty || new java.io.File(corpusPath).exists())
       return
-    val redirecting = $"f_status".isin(HttpFetcher.RedirectCodes.toSeq: _*) && $"next".isNotNull
-    val p = pages.select($"url", $"status", $"content_type", $"body",
-      $"image_id", $"redirect_to")
-    var cur = p.select(
-      $"url".as("src_url"), $"status".as("f_status"),
-      $"content_type".as("f_ct"), $"body".as("f_body"),
-      $"image_id".as("f_image_id"), $"redirect_to".as("next"),
-      lit(0).as("hops"))
-    for (_ <- 1 to config.maxRedirects) {
-      val pending = cur.filter(redirecting)
-      val done = cur.filter(!redirecting)
-      val stepped = pending.select($"src_url", $"next", $"hops")
-        .join(p.withColumnRenamed("url", "next"), Seq("next"), "left")
-        .select($"src_url",
-          coalesce($"status", lit(-1)).as("f_status"), // -1 = broken hop ⇒ connection error
-          $"content_type".as("f_ct"), $"body".as("f_body"),
-          $"image_id".as("f_image_id"), $"redirect_to".as("next"),
-          ($"hops" + 1).as("hops"))
-      cur = done.unionByName(stepped)
-    }
-    // still redirecting after maxRedirects hops ⇒ too-many-redirects error
-    cur.withColumn("f_err",
-      when($"f_status" === -1, lit(Reasons.connectionError))
-        .when(redirecting, lit(Reasons.maxRedirects)))
-      .drop("next")
-      .write.mode("overwrite").parquet(corpusPath)
+    def redirecting(status: Column, next: Column): Column =
+      status.isin(HttpFetcher.RedirectCodes.toSeq: _*) && next.isNotNull
+    val moving = redirecting($"f_status", $"next")
+    def step(moved: Column, stayed: Column) = when(moving, moved).otherwise(stayed)
+    val hop = pages.select($"url".as("h_url"), $"status".as("h_status"), $"redirect_to".as("h_next"))
+    var chased = pages.filter(redirecting($"status", $"redirect_to")).select($"url".as("src_url"),
+      $"url".as("tgt"), $"status".as("f_status"), $"redirect_to".as("next"), lit(0).as("hops"))
+    for (_ <- 1 to config.maxRedirects)
+      chased = chased.join(hop, $"next" === $"h_url", "left").select($"src_url",
+        step($"h_url", $"tgt").as("tgt"), // a broken hop has no target and status -1
+        step(coalesce($"h_status", lit(-1)), $"f_status").as("f_status"),
+        step($"h_next", $"next").as("next"), step($"hops" + 1, $"hops").as("hops"))
+    val content = Seq($"content_type".as("f_ct"), $"body".as("f_body"), $"image_id".as("f_image_id"))
+    val passed = pages.filter(!redirecting($"status", $"redirect_to")).select(Seq($"url".as("src_url"),
+      $"status".as("f_status")) ++ content ++ Seq($"redirect_to".as("next"), lit(0).as("hops")): _*)
+    val resolved = pages.select($"url" +: content: _*)
+      .join(broadcast(chased), $"url" === $"tgt").drop("url", "tgt")
+    val broken = chased.filter($"tgt".isNull).drop("tgt") // no target page: no content
+    passed.unionByName(resolved).unionByName(broken, allowMissingColumns = true)
+      .withColumn("f_err", when($"f_status" === -1, lit(Reasons.connectionError))
+        .when(moving, lit(Reasons.maxRedirects))) // still redirecting after maxRedirects hops
+      .drop("next").write.mode("overwrite").parquet(corpusPath)
   }
 
   /** The resolved corpus: the user-registered url-bucketed catalog table

@@ -109,7 +109,16 @@ private[plans] object Manifests {
   }
 }
 
+object SnapTable {
+  /** Spark expands glob patterns in the paths it reads parquet from, so a
+    * dir whose path holds one of these characters is not read back. */
+  def requireGlobFree(path: String, what: String): Unit =
+    require(!path.exists("\\[]{}*?".contains(_)), s"$what '$path' holds one of " +
+      "the glob characters \\ [ ] { } * ?, which Spark's parquet reader expands")
+}
+
 final class SnapTable(spark: SparkSession, root: String) extends SnapshotStore {
+  SnapTable.requireGlobFree(root, "snapshot root")
   private val rootPath: Path = Paths.get(root)
   Files.createDirectories(rootPath.resolve("snapshots"))
 

@@ -154,4 +154,32 @@ class BenchReplaySpec extends AnyFunSuite {
     assert(Bench.legWidths(32) === ((4, 16, true)))
     assert(Bench.legWidths(2) === ((1, 4, false)))
   }
+
+  test("nextRound: a 229 s crawl round and a 600 s wall run no crawl retry before politeness") {
+    def round(wall: Double, extra: Boolean) = Round(None, None, None, Window(1.0, 1.0), wall, extra)
+    // every query-suite time the wall leaves room for; from a start of
+    // 100-140 s a slim retry (est. 0.8x) fits where a first politeness
+    // round (est. 2x) does not
+    val schedules = (0 to 370 by 10).map { start =>
+      var p = Bench.Progress(start, 600, Nil, Nil, weakClean = 0, politeClean = 0)
+      val ran = Iterator.continually(Bench.nextRound(p)._1).takeWhile(_.nonEmpty).map(_.get)
+        .map { n =>
+          assert(n.polite || !n.extra || p.polite.nonEmpty,
+            s"start $start: a crawl retry ahead of any politeness round")
+          val wall = if (n.polite) 2 * 229.0 else 229.0
+          p = if (n.polite) p.copy(elapsed = p.elapsed + wall, polite = p.polite :+ round(wall, n.extra))
+            else p.copy(elapsed = p.elapsed + wall, crawl = p.crawl :+ round(wall, n.extra))
+          n
+        }.toList
+      assert(Bench.nextRound(p)._2, s"start $start: the wall turned a round down")
+      ran
+    }
+    assert(schedules.forall(_.forall(n => !n.extra)), schedules)
+    assert(schedules.head === List(Bench.Next(false, false), Bench.Next(false, false)))
+    // with the politeness rounds in, 270 s left (no room for a trial round)
+    // does buy a slim retry
+    val p = Bench.Progress(330, 600, Seq(round(229, false)),
+      Seq(round(60, false), round(60, false)), 0, 0)
+    assert(Bench.nextRound(p) === ((Some(Bench.Next(false, true)), true)))
+  }
 }

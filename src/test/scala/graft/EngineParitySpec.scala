@@ -22,6 +22,24 @@ object TestSpark {
   }
 }
 
+/** Redirect edges for `prepareCorpus`: every chain shape its resolution
+  * distinguishes, on one host. Each page's body names its path, so a
+  * resolved row shows whose content it carries. */
+object RedirectEdges {
+  private def p(path: String, status: Int = 200, to: String = null,
+      imageId: String = null): PageRow =
+    Fixtures.page(s"http://re.test/$path", s"body:$path", status = status,
+      imageId = imageId, redirectTo = Option(to).map(t => s"http://re.test/$t").orNull)
+  def pages: Seq[PageRow] =
+    (0 until 5).map(i => p(s"a$i", 301, s"a${i + 1}")) ++ Seq(p("a5")) ++ // resolves in 5
+      (0 until 7).map(i => p(s"b$i", 302, s"b${i + 1}")) ++ Seq(p("b7")) ++ // 7 hops
+      Seq(p("c0", 307, "missing"), // hop to a url with no page
+        p("d0", 308, "d0"), // self-redirect
+        p("e0", 303, "e1"), p("e1", 404), // redirect onto a 404
+        p("f0", 301, "f1"), p("f1", imageId = "img-f1"), // onto an image page
+        p("g0", 301)) // a 301 without a target passes as it is
+}
+
 /**
  * End-to-end crawl parity: the Spark engine must reproduce the
  * reference-semantics oracle on every fixture (visited set, per-URL depth,
@@ -700,5 +718,91 @@ class EngineParitySpec extends AnyFunSuite {
       "v0 num_buckets=32.0 seeded=7.0",
       "v1 cycle=2.0 dangling_images=0.0 deduped=0.0 deferred_robots=0.0 drained=7.0 enqueued=16.0 hot_host_salts=8.0 hot_hosts=0.0 num_buckets=32.0 robots_fetched=7.0 waves=2.0",
       "v2 cycle=4.0 dangling_images=1.0 deduped=1.0 deferred_robots=0.0 drained=18.0 enqueued=1.0 hot_host_salts=8.0 hot_hosts=0.0 num_buckets=32.0 robots_fetched=1.0 waves=2.0"))
+  }
+
+  test("prepareCorpus: resolved corpus rows pinned as goldens at maxRedirects 0, 1 and 5") {
+    def resolved(k: Int): Seq[String] = {
+      val engine = new CrawlEngine(spark, CrawlConfig(maxRedirects = k),
+        spark.createDataset(RedirectEdges.pages).toDF(),
+        spark.createDataset(Fixtures.imagesFor(RedirectEdges.pages)).toDF(),
+        Files.createTempDirectory("graft-resolve").toString)
+      engine.prepareCorpus()
+      assert(engine.resolvedCorpus.columns.toSeq ===
+        Seq("src_url", "f_status", "f_ct", "f_body", "f_image_id", "hops", "f_err"))
+      engine.resolvedCorpus.collect()
+        .map(_.mkString(",").replace("http://re.test/", "")).sorted.toSeq
+    }
+    // literal goldens, captured from the hop loop this resolution replaced.
+    // A row is (src_url, f_status, f_ct, f_body, f_image_id, hops, f_err)
+    val goldens = Map(
+    0 -> Seq(
+      "a0,301,text/html,body:a0,null,0,MaxRedirectsReached",
+      "a1,301,text/html,body:a1,null,0,MaxRedirectsReached",
+      "a2,301,text/html,body:a2,null,0,MaxRedirectsReached",
+      "a3,301,text/html,body:a3,null,0,MaxRedirectsReached",
+      "a4,301,text/html,body:a4,null,0,MaxRedirectsReached",
+      "a5,200,text/html,body:a5,null,0,null",
+      "b0,302,text/html,body:b0,null,0,MaxRedirectsReached",
+      "b1,302,text/html,body:b1,null,0,MaxRedirectsReached",
+      "b2,302,text/html,body:b2,null,0,MaxRedirectsReached",
+      "b3,302,text/html,body:b3,null,0,MaxRedirectsReached",
+      "b4,302,text/html,body:b4,null,0,MaxRedirectsReached",
+      "b5,302,text/html,body:b5,null,0,MaxRedirectsReached",
+      "b6,302,text/html,body:b6,null,0,MaxRedirectsReached",
+      "b7,200,text/html,body:b7,null,0,null",
+      "c0,307,text/html,body:c0,null,0,MaxRedirectsReached",
+      "d0,308,text/html,body:d0,null,0,MaxRedirectsReached",
+      "e0,303,text/html,body:e0,null,0,MaxRedirectsReached",
+      "e1,404,text/html,body:e1,null,0,null",
+      "f0,301,text/html,body:f0,null,0,MaxRedirectsReached",
+      "f1,200,text/html,body:f1,img-f1,0,null",
+      "g0,301,text/html,body:g0,null,0,null"),
+    1 -> Seq(
+      "a0,301,text/html,body:a1,null,1,MaxRedirectsReached",
+      "a1,301,text/html,body:a2,null,1,MaxRedirectsReached",
+      "a2,301,text/html,body:a3,null,1,MaxRedirectsReached",
+      "a3,301,text/html,body:a4,null,1,MaxRedirectsReached",
+      "a4,200,text/html,body:a5,null,1,null",
+      "a5,200,text/html,body:a5,null,0,null",
+      "b0,302,text/html,body:b1,null,1,MaxRedirectsReached",
+      "b1,302,text/html,body:b2,null,1,MaxRedirectsReached",
+      "b2,302,text/html,body:b3,null,1,MaxRedirectsReached",
+      "b3,302,text/html,body:b4,null,1,MaxRedirectsReached",
+      "b4,302,text/html,body:b5,null,1,MaxRedirectsReached",
+      "b5,302,text/html,body:b6,null,1,MaxRedirectsReached",
+      "b6,200,text/html,body:b7,null,1,null",
+      "b7,200,text/html,body:b7,null,0,null",
+      "c0,-1,null,null,null,1,ConnectionError",
+      "d0,308,text/html,body:d0,null,1,MaxRedirectsReached",
+      "e0,404,text/html,body:e1,null,1,null",
+      "e1,404,text/html,body:e1,null,0,null",
+      "f0,200,text/html,body:f1,img-f1,1,null",
+      "f1,200,text/html,body:f1,img-f1,0,null",
+      "g0,301,text/html,body:g0,null,0,null"),
+    5 -> Seq(
+      "a0,200,text/html,body:a5,null,5,null",
+      "a1,200,text/html,body:a5,null,4,null",
+      "a2,200,text/html,body:a5,null,3,null",
+      "a3,200,text/html,body:a5,null,2,null",
+      "a4,200,text/html,body:a5,null,1,null",
+      "a5,200,text/html,body:a5,null,0,null",
+      "b0,302,text/html,body:b5,null,5,MaxRedirectsReached",
+      "b1,302,text/html,body:b6,null,5,MaxRedirectsReached",
+      "b2,200,text/html,body:b7,null,5,null",
+      "b3,200,text/html,body:b7,null,4,null",
+      "b4,200,text/html,body:b7,null,3,null",
+      "b5,200,text/html,body:b7,null,2,null",
+      "b6,200,text/html,body:b7,null,1,null",
+      "b7,200,text/html,body:b7,null,0,null",
+      "c0,-1,null,null,null,1,ConnectionError",
+      "d0,308,text/html,body:d0,null,5,MaxRedirectsReached",
+      "e0,404,text/html,body:e1,null,1,null",
+      "e1,404,text/html,body:e1,null,0,null",
+      "f0,200,text/html,body:f1,img-f1,1,null",
+      "f1,200,text/html,body:f1,img-f1,0,null",
+      "g0,301,text/html,body:g0,null,0,null"))
+    goldens.foreach { case (k, rows) =>
+      assert(resolved(k) === rows, s"resolved corpus at maxRedirects=$k")
+    }
   }
 }

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.driver.CrawlEngine
+import graft.model.CrawlConfig
 import graft.plans.SnapTable
 
 class SnapTableSpec extends AnyFunSuite {
@@ -51,5 +53,19 @@ class SnapTableSpec extends AnyFunSuite {
       metrics = Map("rate" -> Double.NaN, "rows" -> 2.0, odd -> 1.5))
     val back = new SnapTable(spark, root).readSnapshot(snap.version)
     assert(back === snap.copy(metrics = snap.metrics + ("rate" -> 0.0)))
+  }
+
+  test("a snapshot root or workDir holding a glob character is refused at construction") {
+    val base = Files.createTempDirectory("graft-glob").toString
+    Seq("\\", "[", "]", "{", "}", "*", "?").foreach { c =>
+      val dir = s"$base/a${c}b"
+      val e = intercept[IllegalArgumentException](new SnapTable(spark, dir))
+      assert(e.getMessage.contains("glob characters"), e.getMessage)
+      intercept[IllegalArgumentException](new CrawlEngine(spark, CrawlConfig(),
+        spark.emptyDataFrame, spark.emptyDataFrame, dir))
+      assert(!Files.exists(Paths.get(dir)), s"$dir created")
+    }
+    val plain = new SnapTable(spark, s"$base/plain")
+    assert(plain.latestVersion.isEmpty)
   }
 }

@@ -9,9 +9,12 @@ PARENT_DIR/BENCHMARK.json (`python3 crawlbench/run.py ... --trace 0`) once
 in each checkout, alternating which side runs first. Then, per workload and
 end-to-end metric, prints the median and IQR of each side, how many pairs
 the change won, and flags `WORSE` where the change's median is worse than
-the parent's by more than the metric's bound, and `unresolved` where the
-parent's own spread (IQR / median) is wider than the bound. Everything it
-knows about metrics, directions and bounds comes from BENCHMARK.json.
+the parent's by more than the metric's bound, `GAIN` where the change won at
+least 9 in 10 of the pairs (a tie counts for neither side) and its median is
+better than the parent's by more than the parent's IQR (the rule a claimed
+gain must meet), and `unresolved` where the parent's own spread
+(IQR / median) is wider than the bound. Everything it knows about metrics,
+directions and bounds comes from BENCHMARK.json.
 
 It flags `MORE FAILED` when the change's summed failed/attempted share is
 above the parent's. It exits 1 on any `WORSE`, on `MORE FAILED`, and when a
@@ -70,10 +73,13 @@ def report(bench, workload, pairs):
         wins = sum((y > x) if higher else (y < x) for x, y in ab)
         delta = (mb - ma) / ma if ma else 0.0
         bad = -delta if higher else delta
+        gain = (mb - ma if higher else ma - mb) > qa[1] - qa[0]
         flag = ""
         if bad > m["bound"]:
             flag = "  WORSE"
             worse.append(name)
+        elif 10 * wins >= 9 * len(ab) and gain:
+            flag = "  GAIN"
         elif ma and (qa[1] - qa[0]) / ma > m["bound"]:
             flag = "  unresolved"
         print("%-15s %12.4f %10.4f %12.4f %10.4f %4d/%-2d %+7.1f%%%s" %
