@@ -1,7 +1,10 @@
 package graft.driver
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -25,7 +28,9 @@ import graft.operators.Stages
  * become rules) → PARSE (extract links + image payload) → DEPTH → ENQUEUE
  * (bloom prefilter + anti-join dedup) → COMMIT (atomic snapshot: frontier
  * COW by hostBucket + robots + output + lineage). All state lives in
- * tables; resume = reopen LATEST snapshot.
+ * tables; resume = reopen LATEST snapshot. In [[CrawlEngine.drive]] the
+ * COMMIT overlaps the next group's waves, which drain the frontier the
+ * commit is writing; commits still land one at a time, in order.
  *
  * Scale notes (north_rule): the frontier is partitioned by a SALTED host
  * hash — `bucket = pmod(xxhash64(host), P)` for normal hosts, spread across
@@ -374,9 +379,8 @@ final class CrawlEngine(
     else if (bigBatch)
       claimed.join(corpus.select($"url").hint("shuffle_hash"), Seq("url"), "left_anti")
     else {
-      // broadcasting `claimed` (not a url-only projection) makes this semi
-      // probe's BroadcastExchange identical to the hits join's — reused,
-      // not rebuilt; the extra columns are slim (no bodies)
+      // the semi probe broadcasts claimed's urls only; both broadcasts
+      // read the claimed leaf's blocks
       val present = corpus.select($"url")
         .join(broadcast(claimed), Seq("url"), "left_semi")
       claimed.join(broadcast(present), Seq("url"), "left_anti")
@@ -391,7 +395,7 @@ final class CrawlEngine(
     hits.unionByName(misses)
   }
 
-  import CrawlEngine.{BucketTally, WaveOut, WaveTally}
+  import CrawlEngine.{BucketTally, Committing, GroupStart, GroupWaves, WaveOut, WaveTally}
 
   /**
    * One drain → robots → fetch → parse → enqueue wave (SURVEY §3.4 steps
@@ -410,10 +414,11 @@ final class CrawlEngine(
    * exactly as runGroup's checkpointed wave chaining already does.
    *
    * @param pruneSnap the committed snapshot whose manifest may prune the
-   *   dedup-confirm read — only valid for the FIRST wave after a commit;
-   *   later waves' frontiers exist only in memory, so they prune with a
-   *   bucket predicate on the cached frontier instead (same O(candidate
-   *   buckets) work against the in-memory columnar batches).
+   *   dedup-confirm read — only valid for the FIRST wave of a group that
+   *   loaded it; later waves' frontiers, and a pipelined group's frontier
+   *   whose commit is still writing, exist only in memory, so they prune
+   *   with a bucket predicate on the in-memory frontier instead (same
+   *   O(candidate buckets) work against its checkpointed blocks).
    */
   private def runWave(pruneSnap: Option[Snapshot], frontier: DataFrame,
       robots: DataFrame, cycle: Long): WaveOut = {
@@ -447,14 +452,15 @@ final class CrawlEngine(
     // gate join. Mirrors the reference's per-host robots cache lookup
     // (pipeline/RobotsFilter.scala:22-24: one map probe per request host,
     // not a scan of every cached authority). A mega-wave batch above the
-    // broadcast limit switches both joins to shuffle-hash, like the fetch.
+    // broadcast limit joins the robots table by a shuffle-hash join
+    // instead, like the fetch: both sides shuffle by host once, which
+    // prunes the table as the semi-join would, and the batch is read by
+    // one exchange.
     val bigBatch = expectedBatch > config.broadcastBatchLimit
-    val batchHosts = polite.select($"host").distinct()
     val robotsPruned =
       if (bigBatch) robots.drop("bucket")
-        .join(batchHosts.hint("shuffle_hash"), Seq("host"), "left_semi")
-      else robots.drop("bucket")
-        .join(broadcast(batchHosts), Seq("host"), "left_semi")
+      else robots.drop("bucket") // a broadcast probe needs no distinct hosts
+        .join(broadcast(polite.select($"host")), Seq("host"), "left_semi")
     // the allow/deny verdict is computed ONCE per row as a column (the
     // parse+match UDF is the priciest scalar in the gate), then split —
     // not re-evaluated per branch
@@ -496,9 +502,14 @@ final class CrawlEngine(
     // (pipeline/Stage.scala, Protocol.scala:33-36). The map column costs
     // broadcast bytes, but the batch is politeness/cap-bounded and default
     // headers are a handful of entries.
+    // A bounded batch is checkpointed EAGERLY: the corpus fetch broadcasts
+    // it twice from concurrent stages (the hits join, and the present
+    // semi-join's url-pruned copy), and two first readers of a lazy leaf
+    // would each compute its partitions. The shuffled joins of a mega-wave
+    // read it through one reused exchange.
     val claimed = allowed.select($"url", $"host", $"bucket", $"depth",
         $"prio", $"retries", $"headers")
-      .unionByName(robotsRequests).localCheckpoint(false)
+      .unionByName(robotsRequests).localCheckpoint(eager = !bigBatch)
     val fetched = config.fetcher match {
       case Some(fetch) =>
         // injected fetcher (S3 production seam, CrawlConfig.fetcher): the
@@ -799,22 +810,52 @@ final class CrawlEngine(
   /**
    * Run up to `maxWaves` waves (logical cycles `startCycle`,
    * `startCycle+1`, …) chained through their in-memory frontiers, then
-   * commit ONE snapshot covering all of them. With wavesPerCommit = 1 this
-   * is exactly the r2 cycle loop; with K > 1 the commit (frontier COW
-   * write + manifest) and the frontier parquet re-read amortize over K
-   * waves — the dominant fixed costs at politeness-bounded wave sizes —
-   * while crawl semantics stay identical because each wave drains the
-   * previous wave's full in-memory frontier. Resume granularity becomes
-   * the group (a crash replays at most K waves — deterministic, so the
-   * final state is unchanged).
+   * commit ONE snapshot covering all of them, and return once it has
+   * landed. With wavesPerCommit = 1 this is exactly the r2 cycle loop; with
+   * K > 1 the commit (frontier COW write + manifest) and the frontier
+   * parquet re-read amortize over K waves — the dominant fixed costs at
+   * politeness-bounded wave sizes — while crawl semantics stay identical
+   * because each wave drains the previous wave's full in-memory frontier.
+   * Resume granularity becomes the group (a crash replays at most K waves —
+   * deterministic, so the final state is unchanged). [[drive]] runs the
+   * same groups, but lets each commit overlap the next group's waves.
    *
    * Returns (snapshot, last wave's progress, last wave's pending, waves run).
    */
   def runGroup(startCycle: Long, maxWaves: Int): (Snapshot, Long, Long, Int) = {
+    val g = runWaves(loadStart(), startCycle, maxWaves, startCycle + maxWaves - 1)
+    val s = try g.commit() finally g.start.frontier.unpersist()
+    hotLoadedVersion = s.version // hotHosts is current for this snapshot
+    (s, g.progressed, g.pending, g.waves)
+  }
+
+  /** A group that starts from LATEST: its frontier (persisted — the group
+    * reads it several times) and robots, with LATEST to prune its first
+    * dedup confirm. */
+  private def loadStart(): GroupStart = {
     val prev = snap.latest.getOrElse(sys.error("engine not initialized"))
     requireBucketCompat(prev)
-    var frontier = loadFrontier(prev).persist(StorageLevel.MEMORY_AND_DISK)
-    var robots = loadRobots(prev)
+    GroupStart(loadFrontier(prev).persist(StorageLevel.MEMORY_AND_DISK),
+      loadRobots(prev), Some(prev))
+  }
+
+  /**
+   * The WAVES half of a group: run up to `maxWaves` waves from `start` and
+   * build, without running it, the commit of their snapshot. Everything the
+   * commit writes is fixed here, on the calling thread (its metrics read
+   * `hotHosts` now), so the commit may run while later waves mutate the
+   * engine's driver-side state.
+   *
+   * @param lastCycle the last cycle the caller may run: a group that ends
+   *   before it with work left is followed by the next group, which drains
+   *   `next` while this commit writes it. The changed frontier and robots
+   *   are then carried as eager leaves ([[stateLeaf]]); an untouched
+   *   frontier carries over as it is.
+   */
+  private def runWaves(start: GroupStart, startCycle: Long, maxWaves: Int,
+      lastCycle: Long): GroupWaves = {
+    var frontier = start.frontier
+    var robots = start.robots
     // full next frontier: untouched buckets pass through, touched buckets
     // replaced — what the next wave drains and what the commit COW-writes
     // (the cow write filters to the group's touched buckets itself)
@@ -824,21 +865,14 @@ final class CrawlEngine(
         else frontier.filter(!$"bucket".isin(w.tally.touched.toSeq: _*))
       untouched.unionByName(w.frontierNext)
     }
-    // inputs of the PREVIOUS wave: releasable once the current wave's jobs
-    // have fully materialized the current inputs (the drain scans every
-    // partition, so after a wave runs, its input state is complete and the
-    // parents are no longer needed)
-    var releasable: Seq[DataFrame] = Nil
+    def finished(w: WaveOut) = w.tally.drained + w.tally.robotsFetched == 0 || w.tally.pending == 0
     var outs = List.empty[WaveOut]
-    var waves = 0
     var stop = false
-    while (waves < maxWaves && !stop) {
-      val w = runWave(if (waves == 0) Some(prev) else None,
-        frontier, robots, startCycle + waves)
+    while (!stop) {
+      val w = runWave(if (outs.isEmpty) start.committed else None,
+        frontier, robots, startCycle + outs.size)
       outs = outs :+ w
-      waves += 1
-      if (w.tally.drained + w.tally.robotsFetched == 0 || w.tally.pending == 0 ||
-        waves >= maxWaves) stop = true
+      if (finished(w) || outs.size >= maxWaves) stop = true
       else {
         // chain into the next wave through a LOCAL CHECKPOINT, not a bare
         // plan: the full-next plan references the previous frontier three
@@ -846,27 +880,35 @@ final class CrawlEngine(
         // would grow the logical tree ~3^K — checkpointing truncates each
         // wave's state to a leaf (one in-memory materialization, which the
         // next wave's drain would have paid anyway). Blocks are reclaimed
-        // by the context cleaner once the group drops its references.
-        releasable.foreach(_.unpersist())
-        releasable = Seq(frontier) ++ (if (w.robotsOut ne robots) Seq(robots) else Nil)
-        frontier = fullNext(w).localCheckpoint(false)
+        // by the context cleaner once nothing references the leaf.
+        frontier = stateLeaf(fullNext(w), frontier, w.tally.enqueued, carried = false)
         robots =
-          if (w.robotsOut ne robots) w.robotsOut.localCheckpoint(false)
+          if (w.robotsOut ne robots)
+            stateLeaf(w.robotsOut, robots, w.tally.robotsFetched, carried = false)
           else robots
       }
     }
     val last = outs.last
+    val waves = outs.size
     val endCycle = startCycle + waves - 1
-    val robotsCommit = last.robotsOut
 
     // per-bucket cumulative row estimates feed hot-host detection (the
     // lineage rows already carry per-bucket enqueue counts — no extra job)
     val lineageRows = outs.flatMap(_.tally.lineageRows)
     lineageRows.foreach(lr =>
       bucketRowEst(lr.bucket) = bucketRowEst.getOrElse(lr.bucket, 0L) + lr.enqueued)
-    val (frontierCommit, promoted, hotTable) = promoteHotHosts(fullNext(last))
-
+    val (promotedFrontier, promoted, hotTable) = promoteHotHosts(fullNext(last))
     val touchedAll = outs.iterator.flatMap(_.tally.touched).toSet ++ promoted
+    val followed = !finished(last) && endCycle < lastCycle
+    val frontierCommit =
+      if (touchedAll.isEmpty) start.frontier
+      else if (followed) stateLeaf(promotedFrontier, start.frontier,
+        outs.map(_.tally.enqueued).sum, carried = true)
+      else promotedFrontier
+    val robotsCommit =
+      if (followed && (last.robotsOut ne start.robots)) stateLeaf(last.robotsOut, start.robots,
+        outs.map(_.tally.robotsFetched).sum, carried = true)
+      else last.robotsOut
     // robots is COW-committed by hostBucket exactly like the frontier: a
     // robots-fetching group rewrites only the buckets that gained hosts,
     // not the whole table
@@ -875,33 +917,58 @@ final class CrawlEngine(
     // avoids a full images-table scan against an empty batch
     val outAppend = outs.flatMap(_.outRows).reduceOption(_ unionByName _)
     val lineage = spark.createDataset(lineageRows).toDF()
+    val fullTables = hotTable.map(t => Map("hothosts" -> t)).getOrElse(Map.empty[String, DataFrame])
+    val cowTables = Map("frontier" -> ((frontierCommit, "bucket", touchedAll))) ++
+      (if (robotsChangedAll.nonEmpty)
+        Map("robots" -> ((robotsCommit, "bucket", robotsChangedAll)))
+      else Map.empty)
+    val appends = outAppend.map(o => Map("output" -> o))
+      .getOrElse(Map.empty[String, DataFrame]) + ("lineage" -> lineage)
+    val metrics = Map(
+      "cycle" -> endCycle.toDouble,
+      "waves" -> waves.toDouble,
+      "num_buckets" -> config.numBuckets.toDouble,
+      "hot_hosts" -> hotHosts.size.toDouble,
+      "hot_host_salts" -> config.hotHostSalts.toDouble,
+      "drained" -> outs.map(_.tally.drained).sum.toDouble,
+      "enqueued" -> outs.map(_.tally.enqueued).sum.toDouble,
+      "deduped" -> outs.map(_.tally.deduped).sum.toDouble,
+      "robots_fetched" -> outs.map(_.tally.robotsFetched).sum.toDouble,
+      "deferred_robots" -> last.tally.deferredRobots.toDouble,
+      "dangling_images" -> outs.map(_.tally.dangling).sum.toDouble)
+    GroupWaves(start, waves, last.tally.drained + last.tally.robotsFetched,
+      last.tally.pending, GroupStart(frontierCommit, robotsCommit, None),
+      () => snap.commit(endCycle, fullTables, cowTables, appends, metrics))
+  }
 
-    val s = snap.commit(endCycle,
-      fullTables = hotTable.map(t => Map("hothosts" -> t)).getOrElse(Map.empty),
-      cowTables = Map("frontier" -> ((frontierCommit, "bucket", touchedAll))) ++
-        (if (robotsChangedAll.nonEmpty)
-          Map("robots" -> ((robotsCommit, "bucket", robotsChangedAll)))
-        else Map.empty),
-      appends = outAppend.map(o => Map("output" -> o))
-        .getOrElse(Map.empty[String, DataFrame]) + ("lineage" -> lineage),
-      metrics = Map(
-        "cycle" -> endCycle.toDouble,
-        "waves" -> waves.toDouble,
-        "num_buckets" -> config.numBuckets.toDouble,
-        "hot_hosts" -> hotHosts.size.toDouble,
-        "hot_host_salts" -> config.hotHostSalts.toDouble,
-        "drained" -> outs.map(_.tally.drained).sum.toDouble,
-        "enqueued" -> outs.map(_.tally.enqueued).sum.toDouble,
-        "deduped" -> outs.map(_.tally.deduped).sum.toDouble,
-        "robots_fetched" -> outs.map(_.tally.robotsFetched).sum.toDouble,
-        "deferred_robots" -> last.tally.deferredRobots.toDouble,
-        "dangling_images" -> outs.map(_.tally.dangling).sum.toDouble))
-    hotLoadedVersion = s.version // hotHosts is current for this snapshot
-
-    releasable.foreach(_.unpersist())
-    frontier.unpersist()
-    robots.unpersist()
-    (s, last.tally.drained + last.tally.robotsFetched, last.tally.pending, waves)
+  /**
+   * `state` — a next frontier or robots table: the `base` state plus
+   * `added` rows — as the checkpoint leaf the next wave or group reads.
+   *
+   * The leaf is sized as Spark sizes a union of `base` and `added` rows of
+   * its schema (a local relation's estimate). Left alone, a checkpoint keeps
+   * its origin plan's estimate, in which a join weighs the product of its
+   * inputs: every chained leaf would square the frontier's size (past ~16
+   * waves planning stalls in big-integer products), and no join would ever
+   * broadcast the frontier's urls.
+   *
+   * A leaf `carried` across its group's commit is computed eagerly, so one
+   * job computes it and both readers — the commit's write and the next
+   * group's drain — read its blocks (two first readers of a lazy leaf would
+   * each compute it). It is also coalesced to one partition per core: the
+   * union of the previous state's partitions and the wave's would otherwise
+   * add up along the crawl, which a group that re-read LATEST never saw.
+   */
+  private def stateLeaf(state: DataFrame, base: DataFrame, added: Long,
+      carried: Boolean): DataFrame = {
+    val leaf = (if (carried) state.coalesce(spark.sparkContext.defaultParallelism) else state)
+      .localCheckpoint(eager = carried)
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val r = leaf.queryExecution.logical.asInstanceOf[LogicalRDD]
+    val size = base.queryExecution.optimizedPlan.stats.sizeInBytes +
+      EstimationUtils.getOutputSize(r.output, added)
+    new classic.Dataset(session,
+      r.copy()(session, Some(Statistics(sizeInBytes = size)), Some(r.constraints)), leaf.encoder)
   }
 
   /** Drive cycles until Finished (O9/O10); returns final snapshot. */
@@ -910,23 +977,61 @@ final class CrawlEngine(
     drive(maxCycles)
   }
 
-  /** Drive at most `maxCycles` micro-cycles, starting after the latest
-    * committed cycle, until Finished — committing every
-    * `config.wavesPerCommit` cycles (O10 batch loop). */
+  /**
+   * Drive at most `maxCycles` micro-cycles, starting after the latest
+   * committed cycle, until Finished — committing every
+   * `config.wavesPerCommit` cycles (O10 batch loop).
+   *
+   * The loop is a two-stage pipeline, like the reference's asynchronous
+   * Manager loop (Manager.scala:82-147): when group k's waves finish, its
+   * COMMIT starts on its own daemon thread and group k+1's waves start
+   * at once from group k's in-memory frontier and robots — the promoted
+   * frontier the commit writes, with the updated hot-host set — pruning its
+   * first dedup confirm in memory (the snapshot is not written yet).
+   * Commits stay strictly ordered: commit k+1 starts only after commit k's
+   * manifest and LATEST have landed. A failed commit stops the loop and is
+   * rethrown here; the waves that ran after it are dropped, and resume
+   * replays them from LATEST. The in-memory state lives for one call: the
+   * first group loads LATEST, so a commit made between calls (addSeeds) is
+   * always seen. Returns, or throws, only once no commit is running.
+   */
   def drive(maxCycles: Int = 1000): Snapshot = {
     var last = snap.latest.getOrElse(sys.error("engine not initialized"))
     val end = last.cycle + maxCycles
     var cycle = last.cycle + 1
-    var done = false
-    while (!done && cycle <= end) {
-      val maxWaves =
-        math.max(1, math.min(config.wavesPerCommit.toLong, end - cycle + 1).toInt)
-      val (s, progressed, pending, waves) = runGroup(cycle, maxWaves)
-      last = s
-      if (progressed == 0 || pending == 0) done = true
-      cycle += waves
+    var start = loadStart()
+    var inFlight: Option[(Committing, GroupWaves)] = None
+    // wait for the running commit; its group's persisted input frontier is
+    // free once it has landed, unless the next group carried it over (the
+    // leaves the commit read are reclaimed by the context cleaner once
+    // nothing references them)
+    def land(): Unit = inFlight.foreach { case (c, g) =>
+      try last = c.land()
+      finally {
+        inFlight = None
+        if (g.next.frontier ne g.start.frontier) g.start.frontier.unpersist()
+      }
     }
-    last
+    var done = false
+    try {
+      while (!done && cycle <= end) {
+        val maxWaves =
+          math.max(1, math.min(config.wavesPerCommit.toLong, end - cycle + 1).toInt)
+        val g = runWaves(start, cycle, maxWaves, end)
+        land()
+        inFlight = Some((new Committing(g.commit), g))
+        start = g.next
+        if (g.progressed == 0 || g.pending == 0) done = true
+        cycle += g.waves
+      }
+      land()
+      hotLoadedVersion = last.version // every promotion so far is committed
+      last
+    } catch { case e: Throwable =>
+      try land() catch { case t: Throwable => e.addSuppressed(t) } // never leave a commit writing
+      hotLoadedVersion = -1L // hotHosts may hold uncommitted promotions
+      throw e
+    } finally start.frontier.unpersist()
   }
 
   /** Reopen state for a resumed crawl: corpus + bloom sizing estimate. */
@@ -1003,6 +1108,36 @@ object CrawlEngine {
     def lineageRows: Seq[LineageRow] = active.map(t => LineageRow(cycle, t.bucket,
       t.drained, t.ok, t.ok, t.errors, t.retried, t.enqueued, deduped,
       deferredRobots, deferredPolite, 0L))
+  }
+
+  /** What a group's first wave drains: the frontier and robots state, and
+    * the committed snapshot holding exactly that frontier, whose manifest may
+    * prune the first dedup confirm (None while that snapshot is still being
+    * written). */
+  private final case class GroupStart(frontier: DataFrame, robots: DataFrame,
+      committed: Option[Snapshot])
+
+  /** A group whose waves have run: what its last wave reported, the state
+    * the next group starts from, and its commit, built but not yet run. */
+  private final case class GroupWaves(start: GroupStart, waves: Int, progressed: Long,
+      pending: Long, next: GroupStart, commit: () => Snapshot)
+
+  /** A group's commit, started at once on its own daemon thread. */
+  private final class Committing(commit: () => Snapshot) extends Thread("graft-commit") {
+    @volatile private var result: Either[Throwable, Snapshot] = _
+    setDaemon(true)
+    start()
+    override def run(): Unit =
+      result = try Right(commit()) catch { case e: Throwable => Left(e) }
+
+    /** Wait for the commit to finish, even through an interrupt (which is
+      * then rethrown), and return its snapshot or throw its error. */
+    def land(): Snapshot = {
+      var interrupted: Option[InterruptedException] = None
+      while (isAlive) try join() catch { case e: InterruptedException => interrupted = Some(e) }
+      interrupted.foreach(e => throw e)
+      result.fold(e => throw e, identity)
+    }
   }
 
   /** Everything one wave hands the group commit (see runGroup). */

@@ -20,6 +20,12 @@ import graft.driver.CrawlEngine
  * The cycle number is always re-derived from the latest snapshot rather
  * than the streaming batchId, so a restarted query (whose batchIds reset)
  * continues the same logical clock.
+ *
+ * A streaming crawl commits synchronously: each micro-batch runs
+ * [[CrawlEngine.runCycle]], which returns once its snapshot has landed, so
+ * it does not get [[CrawlEngine.drive]]'s overlap of each commit with the
+ * next group's waves (nor its `wavesPerCommit` grouping) until the two
+ * loops share one step.
  */
 object CrawlStream {
 

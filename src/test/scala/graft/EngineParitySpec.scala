@@ -117,6 +117,65 @@ class EngineParitySpec extends AnyFunSuite {
     assert(out.forall(_.getBoolean(4)), "caption equality per output row")
   }
 
+  /** The loop `drive` pipelines, run synchronously: one runGroup per
+    * group, each returning once its commit has landed. */
+  def driveSync(e: CrawlEngine): Unit = {
+    var cycle = e.snap.latest.get.cycle + 1
+    var done = false
+    while (!done) {
+      val (_, progressed, pending, waves) = e.runGroup(cycle, e.config.wavesPerCommit)
+      done = progressed == 0 || pending == 0
+      cycle += waves
+    }
+  }
+
+  /** Every snapshot version as what it records — cycle, metrics, and the
+    * data dir of each bucket and append (relative to the store root) — and
+    * the rows of every data dir those name. A version reads exactly the
+    * union of its dirs, so equal manifests over equal dirs are equal
+    * lineage, frontier (per bucket), robots and output rows. */
+  def versions(e: CrawlEngine): (Seq[String], Map[String, Seq[String]]) = {
+    import org.apache.spark.sql.functions.{col, regexp_extract, struct, to_json}
+    val root = s"${e.workDir}/state/"
+    def rel(dir: String) = dir.stripPrefix(root)
+    val snaps = (0L to e.snap.latestVersion.get).map(e.snap.readSnapshot)
+    val manifests = snaps.map { s =>
+      val tables = s.tables.toSeq.sortBy(_._1).map { case (t, bs) =>
+        t + bs.toSeq.sorted.map { case (b, d) => s"$b:${rel(d)}" }.mkString("[", ",", "]") }
+      val appended = s.appended.toSeq.sortBy(_._1).map { case (t, ds) =>
+        t + ds.map(rel(_)).mkString("[", ",", "]") }
+      (Seq(s"v${s.version} cycle=${s.cycle}") ++ s.metrics.toSeq.sorted.map { case (k, x) => s"$k=$x" } ++
+        tables ++ appended).mkString(" ")
+    }
+    val dirs = snaps.flatMap(s => s.tables.values.flatMap(_.values) ++ s.appended.values.flatten).distinct
+    val rows = dirs.groupBy(d => rel(d).split('/')(1)).toSeq.flatMap { case (_, ds) =>
+      val df = spark.read.parquet(ds: _*)
+      df.select(regexp_extract(col("_metadata.file_path"), "/state/(data/.*)/[^/]+$", 1),
+        to_json(struct(df.columns.toIndexedSeq.map(col): _*))).as[(String, String)].collect().toSeq
+    }
+    (manifests, rows.groupMap(_._1)(_._2).map { case (d, rs) => d -> rs.sorted })
+  }
+
+  /** Crawl `pages` twice under `cfg` — `drive` (run) and the synchronous
+    * group loop — and require the same snapshot at every version. */
+  def assertPipelineParity(pages: Seq[PageRow], seeds: Seq[String],
+      cfg: CrawlConfig): Seq[String] = {
+    def engine() = new CrawlEngine(spark, cfg, spark.createDataset(pages).toDF(),
+      spark.createDataset(Fixtures.imagesFor(pages)).toDF(),
+      Files.createTempDirectory("graft-pipe").toString)
+    val piped = engine()
+    piped.run(seeds)
+    val sync = engine()
+    sync.init(seeds)
+    driveSync(sync)
+    val ((got, gotRows), (want, wantRows)) = (versions(piped), versions(sync))
+    assert(got.size === want.size, "snapshot versions")
+    got.zip(want).foreach { case (g, w) => assert(g === w) }
+    assert(gotRows.keySet === wantRows.keySet, "data dirs")
+    gotRows.foreach { case (d, rs) => assert(rs === wantRows(d), d) }
+    got
+  }
+
   test("site3 — NodeTest.scala:74-92: visited {/, /resource, /stuff}, depths {0,1,1}") {
     val (e, o) = runBoth(Fixtures.site3, Fixtures.site3Seeds)
     assertParity(e, o)
@@ -311,6 +370,101 @@ class EngineParitySpec extends AnyFunSuite {
     assert(e.snap.latestVersion.get < e.snap.latest.get.cycle)
   }
 
+  test("pipelined drive commits the same snapshots as the synchronous group loop") {
+    val hotCfg = CrawlConfig(maxDepth = 10, hostBudget = 5)
+    assertPipelineParity(Fixtures.hotHost, Fixtures.hotHostSeeds, hotCfg)
+    assertPipelineParity(Fixtures.hotHost, Fixtures.hotHostSeeds, hotCfg.copy(wavesPerCommit = 3))
+    assertPipelineParity(Fixtures.robotsBasic, Fixtures.robotsBasicSeeds, CrawlConfig())
+    // hot.test is promoted mid-crawl: the group after the promotion drains
+    // the re-bucketed frontier while the promoting commit writes it
+    val promoting = assertPipelineParity(Fixtures.hotHost, Fixtures.hotHostSeeds,
+      hotCfg.copy(hotHostSalts = 8, hotHostThreshold = 12))
+    val hot = promoting.map(_.contains("hot_hosts=1.0"))
+    assert(hot.contains(false) && hot.indexOf(true) > 0 && hot.indexOf(true) < hot.size - 1,
+      s"promotion must land mid-crawl: $hot")
+  }
+
+  /** Delegates to `inner`; its commit of version `failAt` waits until a
+    * Spark job starts after the commit began — the next group's waves are
+    * the only other work then — and throws. */
+  final class FailingCommitStore(inner: graft.plans.SnapshotStore, failAt: Long)
+      extends graft.plans.SnapshotStore {
+    import graft.plans.Snapshot
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val attempted = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    @volatile var waveJobSeen = false
+    def latestVersion = inner.latestVersion
+    def readSnapshot(v: Long) = inner.readSnapshot(v)
+    def readTable(s: Snapshot, t: String) = inner.readTable(s, t)
+    def readTableBuckets(s: Snapshot, t: String, b: Set[Int]) = inner.readTableBuckets(s, t, b)
+    def readAppended(s: Snapshot, t: String) = inner.readAppended(s, t)
+    def commit(cycle: Long, fullTables: Map[String, DataFrame],
+        cowTables: Map[String, (DataFrame, String, Set[Int])],
+        appends: Map[String, DataFrame], metrics: Map[String, Double]): Snapshot = {
+      val version = inner.latestVersion.map(_ + 1).getOrElse(0L)
+      attempted.add(version)
+      if (version != failAt) return inner.commit(cycle, fullTables, cowTables, appends, metrics)
+      val since = System.currentTimeMillis()
+      val started = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.time > since) started.countDown()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try waveJobSeen = started.await(2, java.util.concurrent.TimeUnit.MINUTES)
+      finally spark.sparkContext.removeSparkListener(listener)
+      throw new IllegalStateException(s"injected failure committing v$version")
+    }
+  }
+
+  /** Crash commit v2 of a site3 crawl while group 3's waves run, on the
+    * store `mk(dir)` makes; `written(dir, v)` tells whether any data of
+    * version v was written. */
+  def assertInFlightCommitFailure(mk: String => graft.plans.SnapshotStore,
+      written: (String, Long) => Boolean): Unit = {
+    import org.apache.spark.sql.DataFrame
+    val pages = Fixtures.site3
+    def engine(dir: String, store: graft.plans.SnapshotStore) = new CrawlEngine(spark,
+      CrawlConfig(), spark.createDataset(pages).toDF(),
+      spark.createDataset(Fixtures.imagesFor(pages)).toDF(), dir, store)
+    val dir = Files.createTempDirectory("graft-inflight").toString
+    val failing = new FailingCommitStore(mk(dir), failAt = 2)
+    val e = engine(dir, failing)
+    e.init(Fixtures.site3Seeds)
+    val err = intercept[IllegalStateException](e.drive())
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "drive threw while a Spark job it started still ran")
+    assert(err.getMessage === "injected failure committing v2")
+    assert(failing.waveJobSeen, "group 3's waves never started a job during commit v2")
+    assert(e.snap.latestVersion === Some(1L))
+    assert(failing.attempted.toArray.toSeq === Seq(0L, 1L, 2L), "commit v3 must never start")
+    assert(!written(dir, 2L) && !written(dir, 3L), "data of an uncommitted version")
+    // resume in a fresh engine replays from v1 to the uninterrupted state
+    val resumed = engine(dir, mk(dir))
+    resumed.resume()
+    val refDir = Files.createTempDirectory("graft-inflight-ref").toString
+    val ref = engine(refDir, mk(refDir))
+    ref.run(Fixtures.site3Seeds)
+    def dump(df: DataFrame) = df.toJSON.collect().sorted.toSeq
+    assert(dump(resumed.frontierNow) === dump(ref.frontierNow), "frontier")
+    assert(dump(resumed.outputNow) === dump(ref.outputNow), "output")
+    assert(dump(resumed.lineageNow) === dump(ref.lineageNow), "lineage")
+  }
+
+  test("a commit failing while the next group's waves run stops drive; resume completes the crawl") {
+    import graft.plans.{CatalogSnapshotStore, SnapTable}
+    import org.apache.spark.sql.functions.col
+    assertInFlightCommitFailure(dir => new SnapTable(spark, s"$dir/state"), (dir, v) =>
+      Option(new java.io.File(s"$dir/state/data").listFiles).toSeq.flatten
+        .exists(t => new java.io.File(t, s"v$v").exists))
+    val prefix = s"inflight${System.nanoTime() % 1000000}"
+    assertInFlightCommitFailure(dir => new CatalogSnapshotStore(spark, prefix + dir.hashCode.abs,
+      s"$dir/manifest"), (dir, v) => spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith(prefix + dir.hashCode.abs))
+      .exists(t => !spark.table(t).where(col("snap_v") === v).isEmpty))
+  }
+
   test("resume from snapshot reproduces the identical final state") {
     val dir = Files.createTempDirectory("graft-resume").toString
     val pages = Fixtures.hotHost
@@ -379,20 +533,25 @@ class EngineParitySpec extends AnyFunSuite {
 
   test("addSeeds: page linking BACK to an injected seed is deduped (O5 stays exact)") {
     val pages = Fixtures.site3 ++ Fixtures.loopback
-    val dir = Files.createTempDirectory("graft-loopback").toString
-    val engine = new CrawlEngine(spark, CrawlConfig(),
-      spark.createDataset(pages).toDF(),
-      spark.createDataset(Fixtures.imagesFor(pages)).toDF(), dir)
-    engine.run(Fixtures.site3Seeds)
-    val added = engine.addSeeds(Fixtures.loopbackSeeds)
-    assert(added === 1)
-    engine.resume()
-    // /loop links "/" back to the injected seed: exactly ONE frontier row
-    // (a duplicate here means the seen filter missed the injection)
-    val dupes = engine.frontierNow.filter($"url" === "http://bb.test/").count()
-    assert(dupes === 1, "injected seed re-enqueued by its loopback link")
-    val visited = engine.visited.select("url").as[String].collect().toSet
-    assert(visited.contains("http://bb.test/") && visited.contains("http://bb.test/loop"))
+    // crawl, inject, then crawl on: by resume() (CrawlMain's --add-urls
+    // path) and by a second drive() of the same engine, whose first group
+    // loads the injection
+    for (crawlOn <- Seq[CrawlEngine => Unit](_.resume(), _.drive())) {
+      val dir = Files.createTempDirectory("graft-loopback").toString
+      val engine = new CrawlEngine(spark, CrawlConfig(),
+        spark.createDataset(pages).toDF(),
+        spark.createDataset(Fixtures.imagesFor(pages)).toDF(), dir)
+      engine.run(Fixtures.site3Seeds)
+      val added = engine.addSeeds(Fixtures.loopbackSeeds)
+      assert(added === 1)
+      crawlOn(engine)
+      // /loop links "/" back to the injected seed: exactly ONE frontier row
+      // (a duplicate here means the seen filter missed the injection)
+      val dupes = engine.frontierNow.filter($"url" === "http://bb.test/").count()
+      assert(dupes === 1, "injected seed re-enqueued by its loopback link")
+      val visited = engine.visited.select("url").as[String].collect().toSet
+      assert(visited.contains("http://bb.test/") && visited.contains("http://bb.test/loop"))
+    }
   }
 
   test("a wave of more than 50,000 links folds into RECENT by a distributed build, dedup stays exact") {
