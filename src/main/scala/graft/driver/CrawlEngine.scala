@@ -28,8 +28,9 @@ import graft.operators.Stages
  * become rules) → PARSE (extract links + image payload) → DEPTH → ENQUEUE
  * (bloom prefilter + anti-join dedup) → COMMIT (atomic snapshot: frontier
  * COW by hostBucket + robots + output + lineage). All state lives in
- * tables; resume = reopen LATEST snapshot. In [[CrawlEngine.drive]] the
- * COMMIT overlaps the next group's waves, which drain the frontier the
+ * tables; resume = reopen LATEST snapshot. One loop runs the cycles
+ * ([[CrawlEngine.advance]], behind `drive` and the streaming surface); in it
+ * each COMMIT overlaps the next group's waves, which drain the frontier the
  * commit is writing; commits still land one at a time, in order.
  *
  * Scale notes (north_rule): the frontier is partitioned by a SALTED host
@@ -78,7 +79,7 @@ final class CrawlEngine(
   // Both ship to executors via sc.broadcast. A url is "maybe seen" iff
   // either sketch says so; false positives fall through to the exact
   // anti-join, false negatives are impossible because every enqueue path
-  // (runCycle commit AND mid-crawl addSeeds) feeds RECENT before the next
+  // (a wave's enqueue AND mid-crawl addSeeds) feeds RECENT before the next
   // drain — so dedup stays exact.
   // Hot-host salting state (north_rule "salted host-hash"; see
   // CrawlConfig.hotHostSalts). `hotHosts` is the PERSISTED promotion set —
@@ -400,10 +401,10 @@ final class CrawlEngine(
   /**
    * One drain → robots → fetch → parse → enqueue wave (SURVEY §3.4 steps
    * 1-8) as pure transforms over the IN-MEMORY frontier/robots state,
-   * without committing: runGroup chains `wavesPerCommit` of these through
-   * their checkpointed outputs and commits once, so the snapshot write (the
-   * dominant fixed cost at small wave sizes) amortizes over K waves while
-   * crawl semantics stay wave-per-cycle identical.
+   * without committing: [[runWaves]] chains `wavesPerCommit` of these
+   * through their checkpointed outputs into one commit, so the snapshot
+   * write (the dominant fixed cost at small wave sizes) amortizes over K
+   * waves while crawl semantics stay wave-per-cycle identical.
    *
    * Design rule: wave intermediates are plan leaves (`localCheckpoint`); no
    * cycle-path DataFrame is persisted on top of another persisted one. A
@@ -411,17 +412,9 @@ final class CrawlEngine(
    * every SQL execution start and AQE stage update, so stacked caches doubled
    * the printed tree per layer. Checkpoint blocks are not recomputed after
    * executor loss: a failed group replays from the last committed snapshot,
-   * exactly as runGroup's checkpointed wave chaining already does.
-   *
-   * @param pruneSnap the committed snapshot whose manifest may prune the
-   *   dedup-confirm read — only valid for the FIRST wave of a group that
-   *   loaded it; later waves' frontiers, and a pipelined group's frontier
-   *   whose commit is still writing, exist only in memory, so they prune
-   *   with a bucket predicate on the in-memory frontier instead (same
-   *   O(candidate buckets) work against its checkpointed blocks).
+   * exactly as the checkpointed wave chaining of [[runWaves]] already does.
    */
-  private def runWave(pruneSnap: Option[Snapshot], frontier: DataFrame,
-      robots: DataFrame, cycle: Long): WaveOut = {
+  private def runWave(frontier: DataFrame, robots: DataFrame, cycle: Long): WaveOut = {
     // ---- 1. DRAIN candidates (O1): window top-k per host ----------------
     val drainable = frontier.filter(drainablePredicate(cycle))
     // ---- 2. POLITE (O12): ≤ hostBudget rows per host per cycle ----------
@@ -659,21 +652,12 @@ final class CrawlEngine(
     val maybe = batchLinks.filter(mightContain($"url"))
     // partition pruning on the seen side: a url's frontier row can only live
     // in bucket(host(url)), so the exact confirm join reads ONLY the
-    // candidate urls' bucket directories of the frontier snapshot —
-    // O(candidate buckets) IO per cycle, not O(frontier). Waves past the
-    // first in a commit group have no snapshot of their chained frontier to
-    // prune (it exists only in memory), so they prune with the equivalent
-    // bucket predicate over the cached frontier.
+    // candidate urls' buckets of the frontier this wave drains (persisted or
+    // a checkpoint leaf, already read in full by the drain)
     val seenSide =
       if (candBuckets.isEmpty) frontier.select("url").where(lit(false))
       else if (candBuckets.size * 2 <= config.numBuckets)
-        pruneSnap match {
-          case Some(p) => snap.readTableBuckets(p, "frontier", candBuckets)
-            .map(_.select("url"))
-            .getOrElse(frontier.select("url").where(lit(false)))
-          case None => frontier
-            .filter($"bucket".isin(candBuckets.toSeq: _*)).select("url")
-        }
+        frontier.filter($"bucket".isin(candBuckets.toSeq: _*)).select("url")
       else frontier.select("url") // most buckets touched: cached full scan wins
     val confirmed = maybe.join(seenSide, Seq("url"), "left_anti")
     // child requests get fresh default headers, exactly as the reference
@@ -800,51 +784,14 @@ final class CrawlEngine(
       rebucket, Some(hotHosts.toSeq.sorted.toDF("host")))
   }
 
-  /** Run one micro-cycle and commit it; returns (snapshot, progress,
-    * pending) — see [[runGroup]]. */
-  def runCycle(cycle: Long): (Snapshot, Long, Long) = {
-    val (s, progressed, pending, _) = runGroup(cycle, 1)
-    (s, progressed, pending)
-  }
-
-  /**
-   * Run up to `maxWaves` waves (logical cycles `startCycle`,
-   * `startCycle+1`, …) chained through their in-memory frontiers, then
-   * commit ONE snapshot covering all of them, and return once it has
-   * landed. With wavesPerCommit = 1 this is exactly the r2 cycle loop; with
-   * K > 1 the commit (frontier COW write + manifest) and the frontier
-   * parquet re-read amortize over K waves — the dominant fixed costs at
-   * politeness-bounded wave sizes — while crawl semantics stay identical
-   * because each wave drains the previous wave's full in-memory frontier.
-   * Resume granularity becomes the group (a crash replays at most K waves —
-   * deterministic, so the final state is unchanged). [[drive]] runs the
-   * same groups, but lets each commit overlap the next group's waves.
-   *
-   * Returns (snapshot, last wave's progress, last wave's pending, waves run).
-   */
-  def runGroup(startCycle: Long, maxWaves: Int): (Snapshot, Long, Long, Int) = {
-    val g = runWaves(loadStart(), startCycle, maxWaves, startCycle + maxWaves - 1)
-    val s = try g.commit() finally g.start.frontier.unpersist()
-    hotLoadedVersion = s.version // hotHosts is current for this snapshot
-    (s, g.progressed, g.pending, g.waves)
-  }
-
-  /** A group that starts from LATEST: its frontier (persisted — the group
-    * reads it several times) and robots, with LATEST to prune its first
-    * dedup confirm. */
-  private def loadStart(): GroupStart = {
-    val prev = snap.latest.getOrElse(sys.error("engine not initialized"))
-    requireBucketCompat(prev)
-    GroupStart(loadFrontier(prev).persist(StorageLevel.MEMORY_AND_DISK),
-      loadRobots(prev), Some(prev))
-  }
-
   /**
    * The WAVES half of a group: run up to `maxWaves` waves from `start` and
    * build, without running it, the commit of their snapshot. Everything the
    * commit writes is fixed here, on the calling thread (its metrics read
    * `hotHosts` now), so the commit may run while later waves mutate the
-   * engine's driver-side state.
+   * engine's driver-side state. Resume granularity is the group: a crash
+   * replays at most `maxWaves` deterministic waves, so the final state is
+   * unchanged.
    *
    * @param lastCycle the last cycle the caller may run: a group that ends
    *   before it with work left is followed by the next group, which drains
@@ -869,8 +816,7 @@ final class CrawlEngine(
     var outs = List.empty[WaveOut]
     var stop = false
     while (!stop) {
-      val w = runWave(if (outs.isEmpty) start.committed else None,
-        frontier, robots, startCycle + outs.size)
+      val w = runWave(frontier, robots, startCycle + outs.size)
       outs = outs :+ w
       if (finished(w) || outs.size >= maxWaves) stop = true
       else {
@@ -936,8 +882,7 @@ final class CrawlEngine(
       "robots_fetched" -> outs.map(_.tally.robotsFetched).sum.toDouble,
       "deferred_robots" -> last.tally.deferredRobots.toDouble,
       "dangling_images" -> outs.map(_.tally.dangling).sum.toDouble)
-    GroupWaves(start, waves, last.tally.drained + last.tally.robotsFetched,
-      last.tally.pending, GroupStart(frontierCommit, robotsCommit, None),
+    GroupWaves(start, waves, finished(last), GroupStart(frontierCommit, robotsCommit),
       () => snap.commit(endCycle, fullTables, cowTables, appends, metrics))
   }
 
@@ -977,17 +922,23 @@ final class CrawlEngine(
     drive(maxCycles)
   }
 
+  /** Drive at most `maxCycles` micro-cycles until Finished (see
+    * [[advance]]); returns the final snapshot. */
+  def drive(maxCycles: Int = 1000): Snapshot = advance(maxCycles)._1
+
   /**
-   * Drive at most `maxCycles` micro-cycles, starting after the latest
-   * committed cycle, until Finished — committing every
-   * `config.wavesPerCommit` cycles (O10 batch loop).
+   * The crawl loop, and the only one: [[drive]] and each micro-batch of
+   * [[graft.streaming.CrawlStream]] run it. It runs at most `maxCycles`
+   * micro-cycles, starting after the latest committed cycle, until Finished
+   * (O9: the last wave made no progress or left nothing pending) —
+   * committing every `config.wavesPerCommit` cycles (O10 batch loop) — and
+   * returns the final snapshot and whether the crawl reached Finished.
    *
    * The loop is a two-stage pipeline, like the reference's asynchronous
    * Manager loop (Manager.scala:82-147): when group k's waves finish, its
    * COMMIT starts on its own daemon thread and group k+1's waves start
    * at once from group k's in-memory frontier and robots — the promoted
-   * frontier the commit writes, with the updated hot-host set — pruning its
-   * first dedup confirm in memory (the snapshot is not written yet).
+   * frontier the commit writes, with the updated hot-host set.
    * Commits stay strictly ordered: commit k+1 starts only after commit k's
    * manifest and LATEST have landed. A failed commit stops the loop and is
    * rethrown here; the waves that ran after it are dropped, and resume
@@ -995,11 +946,14 @@ final class CrawlEngine(
    * first group loads LATEST, so a commit made between calls (addSeeds) is
    * always seen. Returns, or throws, only once no commit is running.
    */
-  def drive(maxCycles: Int = 1000): Snapshot = {
+  def advance(maxCycles: Int): (Snapshot, Boolean) = {
     var last = snap.latest.getOrElse(sys.error("engine not initialized"))
+    requireBucketCompat(last)
     val end = last.cycle + maxCycles
     var cycle = last.cycle + 1
-    var start = loadStart()
+    // the first group's frontier is persisted: its waves read it several times
+    var start = GroupStart(loadFrontier(last).persist(StorageLevel.MEMORY_AND_DISK),
+      loadRobots(last))
     var inFlight: Option[(Committing, GroupWaves)] = None
     // wait for the running commit; its group's persisted input frontier is
     // free once it has landed, unless the next group carried it over (the
@@ -1021,12 +975,12 @@ final class CrawlEngine(
         land()
         inFlight = Some((new Committing(g.commit), g))
         start = g.next
-        if (g.progressed == 0 || g.pending == 0) done = true
+        done = g.finished
         cycle += g.waves
       }
       land()
       hotLoadedVersion = last.version // every promotion so far is committed
-      last
+      (last, done)
     } catch { case e: Throwable =>
       try land() catch { case t: Throwable => e.addSuppressed(t) } // never leave a commit writing
       hotLoadedVersion = -1L // hotHosts may hold uncommitted promotions
@@ -1110,17 +1064,14 @@ object CrawlEngine {
       deferredRobots, deferredPolite, 0L))
   }
 
-  /** What a group's first wave drains: the frontier and robots state, and
-    * the committed snapshot holding exactly that frontier, whose manifest may
-    * prune the first dedup confirm (None while that snapshot is still being
-    * written). */
-  private final case class GroupStart(frontier: DataFrame, robots: DataFrame,
-      committed: Option[Snapshot])
+  /** What a group's first wave drains: the frontier and robots state. */
+  private final case class GroupStart(frontier: DataFrame, robots: DataFrame)
 
-  /** A group whose waves have run: what its last wave reported, the state
-    * the next group starts from, and its commit, built but not yet run. */
-  private final case class GroupWaves(start: GroupStart, waves: Int, progressed: Long,
-      pending: Long, next: GroupStart, commit: () => Snapshot)
+  /** A group whose waves have run: whether its last wave found the crawl
+    * Finished, the state the next group starts from, and its commit, built
+    * but not yet run. */
+  private final case class GroupWaves(start: GroupStart, waves: Int, finished: Boolean,
+      next: GroupStart, commit: () => Snapshot)
 
   /** A group's commit, started at once on its own daemon thread. */
   private final class Committing(commit: () => Snapshot) extends Thread("graft-commit") {
@@ -1140,7 +1091,7 @@ object CrawlEngine {
     }
   }
 
-  /** Everything one wave hands the group commit (see runGroup). */
+  /** Everything one wave hands the group commit (see runWaves). */
   private final case class WaveOut(
       frontierNext: DataFrame, // replacement rows for the touched buckets
       robotsOut: DataFrame, // full next robots (same reference when nothing was fetched)

@@ -67,11 +67,10 @@ object CrawlMain {
     val t0 = System.nanoTime()
     val snap =
       if (addUrls.nonEmpty) { // AddTasks parity: inject mid-crawl, then drive
-        engine.prepareResume()
         val added = engine.addSeeds(addUrls)
         println(s"""{"seeds_added":$added}""")
-        engine.resume()
-      } else if (resume) engine.resume()
+        engine.resume(maxCycles)
+      } else if (resume) engine.resume(maxCycles)
       else engine.run(Corpus.seeds(spec, seeds), maxCycles)
     val secs = (System.nanoTime() - t0) / 1e9
 

@@ -10,22 +10,16 @@ import graft.driver.CrawlEngine
  * frontier-drain → fetch → parse → enqueue micro-cycles driven by
  * foreachBatch").
  *
- * A rate source supplies monotonic ticks; each micro-batch drives exactly
- * one engine micro-cycle. All crawl state lives in the engine's snapshot
- * tables — NOT in the streaming state store — so exact resume reopens the
- * LATEST snapshot regardless of the streaming checkpoint (the reference's
- * continuous Manager pull loop, reference Manager.scala:242-256, with the
- * idle re-pull tick becoming the trigger interval).
- *
- * The cycle number is always re-derived from the latest snapshot rather
- * than the streaming batchId, so a restarted query (whose batchIds reset)
- * continues the same logical clock.
- *
- * A streaming crawl commits synchronously: each micro-batch runs
- * [[CrawlEngine.runCycle]], which returns once its snapshot has landed, so
- * it does not get [[CrawlEngine.drive]]'s overlap of each commit with the
- * next group's waves (nor its `wavesPerCommit` grouping) until the two
- * loops share one step.
+ * A rate source supplies monotonic ticks; each micro-batch runs the
+ * engine's crawl loop ([[CrawlEngine.advance]], the loop `drive` runs) for
+ * one commit group of `config.wavesPerCommit` micro-cycles. All crawl state
+ * lives in the engine's snapshot tables — NOT in the streaming state store
+ * — so exact resume reopens the LATEST snapshot regardless of the streaming
+ * checkpoint (the reference's continuous Manager pull loop, reference
+ * Manager.scala:242-256, with the idle re-pull tick becoming the trigger
+ * interval). The loop numbers cycles from the latest snapshot, not from the
+ * streaming batchId, so a restarted query (whose batchIds reset) continues
+ * the same logical clock.
  */
 object CrawlStream {
 
@@ -44,9 +38,8 @@ object CrawlStream {
       .option("checkpointLocation", checkpoint)
       .trigger(tick)
       .foreachBatch { (_: DataFrame, _: Long) =>
-        val cycle = engine.snap.latest.map(_.cycle + 1).getOrElse(1L)
-        val (_, progressed, pending) = engine.runCycle(cycle)
-        if (progressed == 0 || pending == 0) {
+        val (_, finished) = engine.advance(engine.config.wavesPerCommit)
+        if (finished) {
           // Finished: stop from a separate thread (stop() inside
           // foreachBatch would deadlock the micro-batch thread)
           new Thread(() => {

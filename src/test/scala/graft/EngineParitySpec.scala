@@ -117,17 +117,11 @@ class EngineParitySpec extends AnyFunSuite {
     assert(out.forall(_.getBoolean(4)), "caption equality per output row")
   }
 
-  /** The loop `drive` pipelines, run synchronously: one runGroup per
-    * group, each returning once its commit has landed. */
-  def driveSync(e: CrawlEngine): Unit = {
-    var cycle = e.snap.latest.get.cycle + 1
-    var done = false
-    while (!done) {
-      val (_, progressed, pending, waves) = e.runGroup(cycle, e.config.wavesPerCommit)
-      done = progressed == 0 || pending == 0
-      cycle += waves
-    }
-  }
+  /** The loop `drive` pipelines, run synchronously: one `advance` call per
+    * group, each starting from LATEST and returning once its commit has
+    * landed. */
+  def driveSync(e: CrawlEngine): Unit =
+    while (!e.advance(e.config.wavesPerCommit)._2) {}
 
   /** Every snapshot version as what it records — cycle, metrics, and the
     * data dir of each bucket and append (relative to the store root) — and
@@ -475,7 +469,7 @@ class EngineParitySpec extends AnyFunSuite {
     // run only 3 cycles, then "crash"
     val e1 = mkEngine()
     e1.init(Fixtures.hotHostSeeds)
-    (1L to 3L).foreach(e1.runCycle)
+    (1 to 3).foreach(_ => e1.drive(1))
     // a capped resume commits exactly maxCycles more snapshots
     val before = e1.snap.latestVersion.get
     mkEngine().resume(maxCycles = 1)
@@ -502,7 +496,7 @@ class EngineParitySpec extends AnyFunSuite {
       spark.emptyDataset[ImageRow].toDF(), dir)
     val e1 = mkEngine()
     e1.init(Fixtures.hotHostSeeds)
-    e1.runGroup(1L, 3) // one committed group (logical cycles 1..3), then "crash"
+    e1.drive(3) // one committed group (logical cycles 1..3), then "crash"
     val e2 = mkEngine()
     e2.resume()
     val oracle = RefOracle.crawl(pages, Fixtures.hotHostSeeds, cfg)
@@ -522,7 +516,7 @@ class EngineParitySpec extends AnyFunSuite {
       spark.emptyDataset[ImageRow].toDF(), dir)
     val e1 = mk(32)
     e1.init(Fixtures.site3Seeds)
-    e1.runCycle(1L)
+    e1.drive(1)
     val e2 = mk(16)
     val ex = intercept[IllegalArgumentException] { e2.resume() }
     assert(ex.getMessage.contains("numBuckets"))
@@ -715,6 +709,42 @@ class EngineParitySpec extends AnyFunSuite {
     assert(visited === oracle.visited)
   }
 
+  test("a drive call reads the committed frontier once; its dedup confirm prunes in memory") {
+    import graft.plans.{SnapTable, Snapshot, SnapshotStore}
+    import org.apache.spark.sql.DataFrame
+    val dir = Files.createTempDirectory("graft-reads").toString
+    val inner = new SnapTable(spark, s"$dir/state")
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val counting = new SnapshotStore {
+      def latestVersion = inner.latestVersion
+      def readSnapshot(v: Long) = inner.readSnapshot(v)
+      def readTable(s: Snapshot, t: String) = { reads.add(t); inner.readTable(s, t) }
+      def readTableBuckets(s: Snapshot, t: String, b: Set[Int]) = {
+        reads.add(s"$t buckets"); inner.readTableBuckets(s, t, b)
+      }
+      def readAppended(s: Snapshot, t: String) = inner.readAppended(s, t)
+      def commit(cycle: Long, fullTables: Map[String, DataFrame],
+          cowTables: Map[String, (DataFrame, String, Set[Int])],
+          appends: Map[String, DataFrame], metrics: Map[String, Double]) =
+        inner.commit(cycle, fullTables, cowTables, appends, metrics)
+    }
+    val pages = Fixtures.site3
+    val engine = new CrawlEngine(spark, CrawlConfig(), spark.createDataset(pages).toDF(),
+      spark.createDataset(Fixtures.imagesFor(pages)).toDF(), dir, store = counting)
+    def frontierReads(crawl: => Snapshot): Seq[String] = {
+      reads.clear()
+      crawl
+      reads.toArray(Array.empty[String]).toSeq.filter(_.startsWith("frontier"))
+    }
+    // every page seeded: the first wave fetches only robots.txt (a fresh
+    // host's pages defer for it); the next call's first wave links to seeded
+    // pages, which the sketch flags, all in one candidate bucket of 32
+    engine.init(pages.map(_.url))
+    assert(frontierReads(engine.drive(1)) === Seq("frontier"))
+    assert(frontierReads(engine.drive()) === Seq("frontier"))
+    assert(engine.visited.count() === 3)
+  }
+
   test("fetcher seam: injected mock fetcher reproduces the corpus-join crawl byte-identically") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
@@ -800,13 +830,14 @@ class EngineParitySpec extends AnyFunSuite {
       cowTables = Map("frontier" -> ((stuck, "bucket",
         stuck.select("bucket").distinct().as[Int].collect().toSet))))
     // cycles 2..3: not yet stale (started=0, staleCycles=2 ⇒ drainable when c>2)
-    val (_, p2, _) = engine.runCycle(2)
+    def progressed(s: graft.plans.Snapshot) =
+      (s.metrics("drained") + s.metrics("robots_fetched")).toLong
+    val p2 = progressed(engine.drive(1))
     assert(p2 === 0, "not yet stale at cycle 2")
-    val (_, p3, _) = engine.runCycle(3)
+    val p3 = progressed(engine.drive(1))
     assert(p3 > 0, "stale InProgress re-drained at cycle 3")
-    var c = 4L
     var going = true
-    while (going) { val (_, p, _) = engine.runCycle(c); going = p > 0; c += 1 }
+    while (going) { val p = progressed(engine.drive(1)); going = p > 0 }
     val visited = engine.visited.select("url").as[String].collect().toSet
     assert(visited === Set("http://host0.test/", "http://host0.test/resource",
       "http://host0.test/stuff"))

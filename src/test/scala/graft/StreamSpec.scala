@@ -33,6 +33,41 @@ class StreamSpec extends AnyFunSuite {
     assert(out.forall(r => r.getDouble(0) >= 40.0 && r.getBoolean(1)))
   }
 
+  def engineOn(pages: Seq[graft.model.PageRow], cfg: CrawlConfig,
+      dir: String = Files.createTempDirectory("graft-stream").toString): CrawlEngine =
+    new CrawlEngine(spark, cfg, spark.createDataset(pages).toDF(),
+      spark.createDataset(Fixtures.imagesFor(pages)).toDF(), dir)
+  def dump(df: org.apache.spark.sql.DataFrame): Seq[String] = df.toJSON.collect().sorted.toSeq
+
+  test("a streaming crawl commits every wavesPerCommit cycles and matches a plain run") {
+    val cfg = CrawlConfig(maxDepth = 10, hostBudget = 5, wavesPerCommit = 3)
+    val streamed = engineOn(Fixtures.hotHost, cfg)
+    val last = CrawlStream.crawl(streamed, Fixtures.hotHostSeeds)
+    val plain = engineOn(Fixtures.hotHost, cfg)
+    plain.run(Fixtures.hotHostSeeds)
+    assert(dump(streamed.frontierNow) === dump(plain.frontierNow), "frontier")
+    assert(dump(streamed.outputNow) === dump(plain.outputNow), "output")
+    // v0 holds the seeds; every later version commits a group of cycles
+    assert(last.version < last.cycle, s"${last.version} snapshots for ${last.cycle} cycles")
+  }
+
+  test("CrawlStream.resume finishes a crawl cut after one group, as an uninterrupted run") {
+    val pages = Fixtures.hotHost ++ Fixtures.site3
+    val seeds = Fixtures.hotHostSeeds ++ Fixtures.site3Seeds
+    val cfg = CrawlConfig(maxDepth = 10, hostBudget = 5)
+    val dir = Files.createTempDirectory("graft-stream-resume").toString
+    val cut = engineOn(pages, cfg, dir)
+    cut.init(seeds)
+    cut.drive(1) // one committed group, then "crash"
+    val resumed = engineOn(pages, cfg, dir)
+    CrawlStream.resume(resumed)
+    val plain = engineOn(pages, cfg)
+    plain.run(seeds)
+    assert(dump(resumed.frontierNow) === dump(plain.frontierNow), "frontier")
+    assert(dump(resumed.outputNow) === dump(plain.outputNow), "output")
+    assert(dump(resumed.lineageNow) === dump(plain.lineageNow), "lineage")
+  }
+
   test("addSeeds mid-crawl injects new URLs which are then crawled (AddTasks parity)") {
     val pages = Fixtures.site3 ++ Fixtures.httpFilter
     val dir = Files.createTempDirectory("graft-addseeds").toString
